@@ -142,7 +142,9 @@ class ChatDatabase:
                     file_id,
                     chat_record["timestamp"],
                     chat_record["question"],
-                    json.dumps(chat_record["result"], ensure_ascii=False),
+                    # answers can hold datetime/Decimal cells (whole rows of
+                    # a file with a timestamp column)
+                    json.dumps(chat_record["result"], ensure_ascii=False, default=str),
                     chat_record["markdown_result"],
                 ),
             )

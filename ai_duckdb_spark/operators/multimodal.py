@@ -1,9 +1,7 @@
 """Multimodal column plumbing (SURVEY.md §2.9 X9 [D] — north-star scope).
 
-Images/audio/video are modeled as opaque ``binary`` columns plus typed
-metadata, processed with Arrow-batched ``mapInPandas`` (per-partition
-pandas batches — the idiomatic Spark shape for byte-level feature
-extraction). Three tiers, by how far into the payload they reach:
+Images/audio/video are modeled as opaque ``binary`` payloads plus typed
+metadata. Three tiers, by how far into the payload they reach:
 
 1. HEADER/METADATA — real byte-level parsing, no codec needed:
    PNG/GIF/BMP/JPEG dimensions (``parse_image_header``) and RIFF/WAVE
@@ -11,29 +9,35 @@ extraction). Three tiers, by how far into the payload they reach:
 2. PIXEL/SAMPLE — real full decode for every format whose codec is
    public-spec byte/bit arithmetic over the stdlib (+numpy):
    uncompressed 24-bit BMP (``decode_bmp_pixels`` — row padding, BGR
-   order, bottom-up vs top-down storage), 8-bit RGB PNG
-   (``decode_png_pixels`` — CRC verify, stdlib-zlib inflate, all five
-   scanline filters), GIF (``decode_gif_pixels`` — variable-width LZW
-   entropy decode), baseline grayscale JPEG (``decode_jpeg_pixels`` —
-   Huffman entropy decode, dequant, numpy IDCT), baseline COLOR JPEG
-   in 4:4:4 and 4:2:0 (interleaved MCUs, two quant tables, exact
-   fixed-point JFIF YCbCr transform, half-up chroma box-average),
-   Adam7-INTERLACED and indexed-color (PLTE) PNG
-   (``decode_png_pixels`` handles interlace=1 and color type 3),
-   mono 16-bit PCM WAV (``decode_wav_samples``), IMA ADPCM lossy
-   audio (``decode_wav_ima_adpcm`` — 4-bit adaptive quantizer), and
-   exact fixed-point resampling (``resize_pixels``).
-3. Out-of-scope long tail (progressive JPEG, 16-bit/grayscale/
-   alpha PNG, interlaced GIF, perceptual audio
-   codecs): unsupported payloads return None / NotImplementedError
-   rather than misdecoding. The distributed plumbing (schema, batch
-   shape, UDF signature) is identical across tiers, so widening a
-   codec touches only the per-payload function.
+   order, bottom-up vs top-down storage), PNG (``decode_png_pixels`` /
+   ``decode_png_samples`` — CRC verify, stdlib-zlib inflate, all five
+   scanline filters, Adam7 interlace, PLTE, 16-bit grey, RGBA), GIF
+   (``decode_gif_pixels`` — variable-width LZW, interlace), TIFF
+   (II/MM, PackBits), baseline grayscale and COLOR JPEG (4:4:4 and
+   4:2:0 — Huffman entropy decode, dequant, numpy IDCT, exact
+   fixed-point JFIF YCbCr), progressive grayscale JPEG, MJPEG AVI
+   (container walk + the JPEG core), mono/stereo 16-bit PCM WAV, IMA
+   ADPCM and G.711 audio, and exact fixed-point resampling
+   (``resize_pixels``).
+3. Out-of-scope long tail (4:2:2 and progressive color JPEG,
+   perceptual audio codecs): unsupported payloads return None /
+   NotImplementedError rather than misdecoding.
+
+Distributed shape: every multimodal relation is ONE Arrow-batched
+``mapInPandas``, run by ``media_pass`` from two pure per-document
+functions. An ENCODER ``*_payload(id)`` synthesizes a document's media
+closed-form in its id (so a DuckDB oracle recomputes the expected rows
+without the bytes); a MEASURE ``*_rows(payload)`` decodes one payload
+to zero or more typed rows. Both run in the same Python pass, so a
+synthesized payload never crosses the JVM<->Python boundary; a real
+binary column (``attach_binary_payload``) enters the same loop with no
+encoder. Widening a codec touches only its measure, and one measure
+serves every encoder of its format.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -59,9 +63,9 @@ _JPEG_SOF = {0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0
 
 
 def _synth_input(df: DataFrame, id_col: str) -> DataFrame:
-    """Ids-only input for a payload synthesizer, REPARTITIONED to the
-    session's default parallelism. The synth/decode tiers are pure
-    Python work inside mapInPandas, so their parallelism is the input's
+    """Ids-only input for a synthesized media pass, REPARTITIONED to the
+    session's default parallelism. Encode and decode are pure Python
+    work inside mapInPandas, so their parallelism is the input's
     partition count — which for a small parquet fixture is the FILE
     count (often 1), serializing the whole tier on one core. The
     shuffle moves only the 8-byte id column; at real scale the input
@@ -69,6 +73,49 @@ def _synth_input(df: DataFrame, id_col: str) -> DataFrame:
     against skewed file sizes (decode cost follows rows, not bytes)."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.select(F.col(id_col)).repartition(n)
+
+
+_PANDAS_DTYPES = {T.LongType: "int64", T.IntegerType: "int32", T.StringType: "object"}
+
+
+def media_pass(
+    df: DataFrame,
+    id_col: str,
+    encode: Callable[[int], object] | None,
+    measure: Callable[[object], list[tuple]],
+    schema: T.StructType,
+) -> DataFrame:
+    """ONE Arrow-batched mapInPandas from documents to measured media
+    rows — the whole distributed shape of the multimodal tier.
+
+    ``encode(id) -> payload`` synthesizes each document's media from its
+    id over ``_synth_input``'s repartitioned id column, so the payload
+    is built and consumed in the same Python worker and never crosses
+    the JVM<->Python boundary. ``encode=None`` instead reads the binary
+    ``payload`` column ``df`` already carries (a packed-media scan, e.g.
+    ``attach_binary_payload``), on the input's own partitioning.
+    ``measure(payload) -> rows`` decodes one payload to zero or more row
+    tuples: one for a per-document stat, one per frame/window for a
+    fan-out, zeros or none for an undecodable payload (never an
+    exception). Each row is prefixed with the id, and each batch's frame
+    is built once from ``schema`` (id column first), with pandas dtypes
+    taken from its Spark types."""
+    src = df if encode is None else _synth_input(df, id_col)
+
+    def _pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf[id_col].tolist()
+            payloads = pdf["payload"] if encode is None else map(encode, ids)
+            rows = [(i, *row) for i, p in zip(ids, payloads) for row in measure(p)]
+            cols = list(zip(*rows)) or [()] * len(schema.fields)
+            yield pd.DataFrame(
+                {
+                    f.name: pd.Series(c, dtype=_PANDAS_DTYPES[type(f.dataType)])
+                    for f, c in zip(schema.fields, cols)
+                }
+            )
+
+    return src.mapInPandas(_pass, schema)
 
 
 def parse_image_header(data: bytes) -> tuple[str, int, int] | None:
@@ -196,29 +243,11 @@ def attach_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFram
     )
 
 
-def extract_features(binary_df: DataFrame) -> DataFrame:
-    """Byte-level feature extraction via mapInPandas (Arrow batches).
-
-    Columnar batches cross the JVM→Python boundary once per partition
-    chunk; output is a stable typed schema. Swap the body's fake decode
-    for a real codec without touching the distributed shape.
-    """
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            sizes = [decode_image(p, fake=True) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "first_byte": payloads.map(lambda p: int(p[0]) if len(p) else 0).astype("int32"),
-                    "fake_width": pd.Series([w for w, _ in sizes], dtype="int32"),
-                    "fake_height": pd.Series([h for _, h in sizes], dtype="int32"),
-                }
-            )
-
-    return binary_df.mapInPandas(_extract, FEATURE_SCHEMA)
+def feature_rows(payload: bytes) -> list[tuple]:
+    """FEATURE_SCHEMA row of an opaque payload: byte count, first byte,
+    and the deterministic stub decode's (width, height). Swap the fake
+    decode for a real codec without touching the distributed shape."""
+    return [(len(payload), payload[0] if payload else 0, *decode_image(payload, fake=True))]
 
 
 HEADER_SCHEMA = T.StructType(
@@ -233,52 +262,18 @@ HEADER_SCHEMA = T.StructType(
 _SYNTH_FORMATS = ("png", "gif", "bmp", "jpeg")
 
 
-def synthesize_image_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with REAL header bytes, deterministic per id.
-
-    format = id % 4 over png/gif/bmp/jpeg, width = id % 300 + 1,
-    height = id*7 % 200 + 1 — closed-form in the id so an oracle can
-    recompute the expected parse results independently.
-    """
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": [
-                        make_image_header(
-                            _SYNTH_FORMATS[i % 4], int(i % 300 + 1), int(i * 7 % 200 + 1)
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+def image_header_payload(i: int) -> bytes:
+    """REAL header bytes, deterministic per id: format = id % 4 over
+    png/gif/bmp/jpeg, width = id % 300 + 1, height = id*7 % 200 + 1 —
+    closed-form in the id so an oracle can recompute the expected parse
+    results independently."""
+    return make_image_header(_SYNTH_FORMATS[i % 4], i % 300 + 1, i * 7 % 200 + 1)
 
 
-def extract_image_headers(binary_df: DataFrame) -> DataFrame:
-    """(doc_id, format, width, height) via pure-Python header parsing
-    inside mapInPandas — the real (non-stub) decode tier of X9."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_image_header(p) or ("unknown", 0, 0) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "format": pd.Series([f for f, _, _ in parsed], dtype="object"),
-                    "width": pd.Series([w for _, w, _ in parsed], dtype="int32"),
-                    "height": pd.Series([h for _, _, h in parsed], dtype="int32"),
-                }
-            )
-
-    return binary_df.mapInPandas(_parse, HEADER_SCHEMA)
+def image_header_rows(payload: bytes) -> list[tuple]:
+    """HEADER_SCHEMA (format, width, height) via pure-Python header
+    parsing — the real (non-stub) decode tier of X9."""
+    return [parse_image_header(payload) or ("unknown", 0, 0)]
 
 
 FRAME_SCHEMA = T.StructType(
@@ -822,166 +817,54 @@ def make_png_palette(width, height, palette, index) -> bytes:
     )
 
 
-def synthesize_png_interlaced_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid Adam7-interlaced RGB PNGs,
-    closed-form in the id: width = id%14+2, height = (id*7)%11+2 (both
-    ≥2 so several passes are non-empty), pixel(x, y) =
+def png_interlaced_payload(i: int) -> bytes:
+    """COMPLETE valid Adam7-interlaced RGB PNG, closed-form in the id:
+    width = id%14+2, height = (id*7)%11+2 (both ≥2 so several passes
+    are non-empty), pixel(x, y) =
     ((id + 2x + y) % 256, (2*id + 3y) % 256, (id + x*y) % 256)."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 14 + 2, i * 7 % 11 + 2
-                payloads.append(
-                    make_png_interlaced(
-                        w,
-                        h,
-                        lambda x, y, i=i: (
-                            (i + 2 * x + y) % 256,
-                            (2 * i + 3 * y) % 256,
-                            (i + x * y) % 256,
-                        ),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return make_png_interlaced(
+        i % 14 + 2,
+        i * 7 % 11 + 2,
+        lambda x, y: ((i + 2 * x + y) % 256, (2 * i + 3 * y) % 256, (i + x * y) % 256),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
-def synthesize_png_palette_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid indexed-color (PLTE) PNGs,
-    closed-form in the id: width = id%15+1, height = (id*3)%13+1, a full
-    256-entry palette p(i) = ((7i+13)%256, (11i+29)%256, (3i+41)%256),
-    and index(x, y) = (id + 4x + 9y) % 256."""
+_PNG_PALETTE = tuple(
+    ((7 * i + 13) % 256, (11 * i + 29) % 256, (3 * i + 41) % 256) for i in range(256)
+)
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        palette = [((7 * i + 13) % 256, (11 * i + 29) % 256, (3 * i + 41) % 256) for i in range(256)]
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 15 + 1, i * 3 % 13 + 1
-                payloads.append(
-                    make_png_palette(
-                        w, h, palette, lambda x, y, i=i: (i + 4 * x + 9 * y) % 256
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+def png_palette_payload(i: int) -> bytes:
+    """COMPLETE valid indexed-color (PLTE) PNG, closed-form in the id:
+    width = id%15+1, height = (id*3)%13+1, a full 256-entry palette
+    p(i) = ((7i+13)%256, (11i+29)%256, (3i+41)%256), and index(x, y) =
+    (id + 4x + 9y) % 256."""
+    return make_png_palette(
+        i % 15 + 1, i * 3 % 13 + 1, _PNG_PALETTE, lambda x, y: (i + 4 * x + 9 * y) % 256
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
-def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid PNG files, closed-form in
-    the id: width = id%12+1, height = id*5%10+1, pixel(x, y) =
-    ((id + 3x) % 256, (id + 5y) % 256, (id + x + y) % 256); scanline
-    filters cycle None/Sub/Up by row, so decoding exercises real
-    unfiltering on every multi-row image."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 12 + 1, i * 5 % 10 + 1
-                payloads.append(
-                    make_png_image(
-                        w,
-                        h,
-                        lambda x, y, i=i: (
-                            (i + 3 * x) % 256,
-                            (i + 5 * y) % 256,
-                            (i + x + y) % 256,
-                        ),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+def png_payload(i: int) -> bytes:
+    """COMPLETE valid PNG file, closed-form in the id: width = id%12+1,
+    height = id*5%10+1, pixel(x, y) = ((id + 3x) % 256, (id + 5y) % 256,
+    (id + x + y) % 256); scanline filters cycle None/Sub/Up by row, so
+    decoding exercises real unfiltering on every multi-row image."""
+    return make_png_image(
+        i % 12 + 1,
+        i * 5 % 10 + 1,
+        lambda x, y: ((i + 3 * x) % 256, (i + 5 * y) % 256, (i + x + y) % 256),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
-def extract_png_pixel_stats(binary_df: DataFrame) -> DataFrame:
-    """PIXEL_STATS_SCHEMA stats over fully-decoded PNG payloads — the
-    compressed-format twin of extract_pixel_stats (BMP): inflate +
-    unfilter + channel sums all executor-side in mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_png_pixels(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, rows = decoded
-                sr = sg = sb = 0
-                for row in rows:
-                    for r, g, b in row:
-                        sr += r
-                        sg += g
-                        sb += b
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
-
-
-def synthesize_png_gray16_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid 16-BIT GREYSCALE (type 0,
-    depth 16) PNGs, closed-form in the id: width = id%13+1, height =
-    (id*7)%9+1, sample(x, y) = (id*131 + 257x + 263y) % 65536 — values
-    spanning well past 8 bits so a decoder that drops the low byte (or
-    reads little-endian) cannot match. Filters cycle all five types."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 13 + 1, i * 7 % 9 + 1
-                payloads.append(
-                    make_png_channels(
-                        w, h, 0, 16,
-                        lambda x, y, i=i: ((i * 131 + 257 * x + 263 * y) % 65536,),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+def png_gray16_payload(i: int) -> bytes:
+    """COMPLETE valid 16-BIT GREYSCALE (type 0, depth 16) PNG, closed-form
+    in the id: width = id%13+1, height = (id*7)%9+1, sample(x, y) =
+    (id*131 + 257x + 263y) % 65536 — values spanning well past 8 bits so
+    a decoder that drops the low byte (or reads little-endian) cannot
+    match. Filters cycle all five types."""
+    return make_png_channels(
+        i % 13 + 1, i * 7 % 9 + 1, 0, 16, lambda x, y: ((i * 131 + 257 * x + 263 * y) % 65536,)
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 GRAY16_STATS_SCHEMA = T.StructType(
@@ -997,91 +880,37 @@ GRAY16_STATS_SCHEMA = T.StructType(
 )
 
 
-def extract_png_gray16_stats(binary_df: DataFrame) -> DataFrame:
-    """sum/min/max amplitude stats over fully-decoded 16-bit greyscale
-    PNG payloads (decode_png_samples), executor-side in mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_v", "min_v", "max_v")}
-            for payload in pdf["payload"]:
-                decoded = decode_png_samples(payload)
-                if decoded is None or decoded[2] != 0 or decoded[3] != 16:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, _ct, _d, rows = decoded
-                vals = [px[0] for row in rows for px in row]
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_v"].append(sum(vals))
-                out["min_v"].append(min(vals))
-                out["max_v"].append(max(vals))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_v": pd.Series(out["sum_v"], dtype="int64"),
-                    "min_v": pd.Series(out["min_v"], dtype="int64"),
-                    "max_v": pd.Series(out["max_v"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, GRAY16_STATS_SCHEMA)
+def png_gray16_rows(payload: bytes) -> list[tuple]:
+    """GRAY16_STATS_SCHEMA sum/min/max amplitude stats of a fully-decoded
+    16-bit greyscale PNG payload (decode_png_samples)."""
+    decoded = decode_png_samples(payload)
+    if decoded is None or decoded[2] != 0 or decoded[3] != 16:
+        return [(0,) * 6]
+    w, h, _ct, _d, rows = decoded
+    vals = [px[0] for row in rows for px in row]
+    return [(w, h, w * h, sum(vals), min(vals), max(vals))]
 
 
-def synthesize_png_rgba_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload, bg_r, bg_g, bg_b) with COMPLETE valid RGBA
-    (type 6, depth 8) PNGs plus a closed-form background color for
-    compositing: width = id%10+1, height = (id*3)%11+1, pixel(x, y) =
-    ((id+5x)%256, (id+7y)%256, (id+3x+2y)%256, alpha (id*11+17x+29y)%256),
-    background ((id*13+7)%256, (id*17+11)%256, (id*19+23)%256). Filters
-    cycle all five types at bpp=4."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads, bgr, bgg, bgb = [], [], [], []
-            for i in ids:
-                i = int(i)
-                w, h = i % 10 + 1, i * 3 % 11 + 1
-                payloads.append(
-                    make_png_channels(
-                        w, h, 6, 8,
-                        lambda x, y, i=i: (
-                            (i + 5 * x) % 256,
-                            (i + 7 * y) % 256,
-                            (i + 3 * x + 2 * y) % 256,
-                            (i * 11 + 17 * x + 29 * y) % 256,
-                        ),
-                    )
-                )
-                bgr.append((i * 13 + 7) % 256)
-                bgg.append((i * 17 + 11) % 256)
-                bgb.append((i * 19 + 23) % 256)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "bg_r": pd.Series(bgr, dtype="int32"),
-                    "bg_g": pd.Series(bgg, dtype="int32"),
-                    "bg_b": pd.Series(bgb, dtype="int32"),
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("bg_r", T.IntegerType()),
-            T.StructField("bg_g", T.IntegerType()),
-            T.StructField("bg_b", T.IntegerType()),
-        ]
+def png_rgba_payload(i: int) -> tuple[bytes, tuple[int, int, int]]:
+    """(png, background): a COMPLETE valid RGBA (type 6, depth 8) PNG plus
+    a closed-form background color for compositing: width = id%10+1,
+    height = (id*3)%11+1, pixel(x, y) = ((id+5x)%256, (id+7y)%256,
+    (id+3x+2y)%256, alpha (id*11+17x+29y)%256), background
+    ((id*13+7)%256, (id*17+11)%256, (id*19+23)%256). Filters cycle all
+    five types at bpp=4."""
+    png = make_png_channels(
+        i % 10 + 1,
+        i * 3 % 11 + 1,
+        6,
+        8,
+        lambda x, y: (
+            (i + 5 * x) % 256,
+            (i + 7 * y) % 256,
+            (i + 3 * x + 2 * y) % 256,
+            (i * 11 + 17 * x + 29 * y) % 256,
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+    return png, ((i * 13 + 7) % 256, (i * 17 + 11) % 256, (i * 19 + 23) % 256)
 
 
 ALPHA_STATS_SCHEMA = T.StructType(
@@ -1098,58 +927,29 @@ ALPHA_STATS_SCHEMA = T.StructType(
 )
 
 
-def extract_png_alpha_composite_stats(binary_df: DataFrame) -> DataFrame:
-    """Alpha-COMPOSITE stats over fully-decoded RGBA PNG payloads: each
-    pixel is blended over the row's (bg_r, bg_g, bg_b) background with
-    the exact integer source-over formula
+def png_alpha_composite_rows(payload: tuple[bytes, tuple[int, int, int]]) -> list[tuple]:
+    """ALPHA_STATS_SCHEMA alpha-COMPOSITE stats of a fully-decoded RGBA
+    PNG (the ``png_rgba_payload`` pair): each pixel is blended over the
+    background with the exact integer source-over formula
     ``out = (c*a + bg*(255-a) + 127) // 255`` (round-half-up emulated
     with the +127 bias — replayable in portable SQL, no float rounding),
     then reduced to per-channel sums plus the raw alpha sum. This is the
     real pipeline op a thumbnail/training-image normalizer runs on
-    transparent inputs; executor-side in mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b", "sum_a")}
-            for payload, bg in zip(
-                pdf["payload"], zip(pdf["bg_r"], pdf["bg_g"], pdf["bg_b"])
-            ):
-                decoded = decode_png_samples(payload)
-                if decoded is None or decoded[2] != 6 or decoded[3] != 8:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, _ct, _d, rows = decoded
-                bgr, bgg, bgb = (int(v) for v in bg)
-                sr = sg = sb = sa = 0
-                for row in rows:
-                    for r, g, b, a in row:
-                        inv = 255 - a
-                        sr += (r * a + bgr * inv + 127) // 255
-                        sg += (g * a + bgg * inv + 127) // 255
-                        sb += (b * a + bgb * inv + 127) // 255
-                        sa += a
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-                out["sum_a"].append(sa)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                    "sum_a": pd.Series(out["sum_a"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, ALPHA_STATS_SCHEMA)
+    transparent inputs."""
+    data, (bgr, bgg, bgb) = payload
+    decoded = decode_png_samples(data)
+    if decoded is None or decoded[2] != 6 or decoded[3] != 8:
+        return [(0,) * 7]
+    w, h, _ct, _d, rows = decoded
+    sr = sg = sb = sa = 0
+    for row in rows:
+        for r, g, b, a in row:
+            inv = 255 - a
+            sr += (r * a + bgr * inv + 127) // 255
+            sg += (g * a + bgg * inv + 127) // 255
+            sb += (b * a + bgb * inv + 127) // 255
+            sa += a
+    return [(w, h, w * h, sr, sg, sb, sa)]
 
 
 def make_wav_pcm(sample_rate: int, samples: list[int]) -> bytes:
@@ -1328,33 +1128,14 @@ def decode_wav_g711(data: bytes) -> tuple[int, str, list[int]] | None:
     return None
 
 
-def synthesize_g711_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE mono G.711 WAV files — even ids
-    µ-law (0x07), odd ids A-law (0x06) — carrying closed-form companded
-    bytes: rate = RATES[id % 4], n = id % 150 + 1, byte[j] =
-    (id*37 + j*11) % 256. The oracle replays the G.711 expansion curve
-    per byte in SQL, so a hash match proves the bit arithmetic of both
-    companding laws."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 150 + 1
-                raw = bytes((i * 37 + j * 11) % 256 for j in range(n))
-                payloads.append(
-                    make_wav_g711(
-                        _SYNTH_RATES[i % 4], "ulaw" if i % 2 == 0 else "alaw", raw
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+def g711_payload(i: int) -> bytes:
+    """COMPLETE mono G.711 WAV file — even ids µ-law (0x07), odd ids
+    A-law (0x06) — carrying closed-form companded bytes: rate =
+    RATES[id % 4], n = id % 150 + 1, byte[j] = (id*37 + j*11) % 256. The
+    oracle replays the G.711 expansion curve per byte in SQL, so a hash
+    match proves the bit arithmetic of both companding laws."""
+    raw = bytes((i * 37 + j * 11) % 256 for j in range(i % 150 + 1))
+    return make_wav_g711(_SYNTH_RATES[i % 4], "ulaw" if i % 2 == 0 else "alaw", raw)
 
 
 G711_STATS_SCHEMA = T.StructType(
@@ -1370,47 +1151,18 @@ G711_STATS_SCHEMA = T.StructType(
 )
 
 
-def extract_g711_sample_stats(binary_df: DataFrame) -> DataFrame:
-    """Amplitude stats over fully-decoded G.711 payloads (both
-    companding laws), executor-side in mapInPandas."""
+def g711_sample_rows(payload: bytes) -> list[tuple]:
+    """G711_STATS_SCHEMA amplitude stats of a fully-decoded G.711 payload
+    (both companding laws). Decode is a table lookup per byte; the
+    reductions go through ONE numpy pass, not four Python passes."""
+    import numpy as np
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {k: [] for k in ("codec", "sample_rate", "n_samples", "sum_amp", "min_amp", "max_amp")}
-            for payload in pdf["payload"]:
-                decoded = decode_wav_g711(payload)
-                if decoded is None or not decoded[2]:
-                    out["codec"].append("")
-                    out["sample_rate"].append(0)
-                    for k in ("n_samples", "sum_amp", "min_amp", "max_amp"):
-                        out[k].append(0)
-                    continue
-                rate, codec, samples = decoded
-                # decode is a table lookup per byte (sequential by law);
-                # the reductions go through ONE numpy pass, not four
-                # Python passes (r9 judge item 5 sweep)
-                arr = np.asarray(samples, dtype=np.int64)
-                out["codec"].append(codec)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(arr))
-                out["sum_amp"].append(int(arr.sum()))
-                out["min_amp"].append(int(arr.min()))
-                out["max_amp"].append(int(arr.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "codec": out["codec"],
-                    "sample_rate": pd.Series(out["sample_rate"], dtype="int32"),
-                    "n_samples": pd.Series(out["n_samples"], dtype="int64"),
-                    "sum_amp": pd.Series(out["sum_amp"], dtype="int64"),
-                    "min_amp": pd.Series(out["min_amp"], dtype="int32"),
-                    "max_amp": pd.Series(out["max_amp"], dtype="int32"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, G711_STATS_SCHEMA)
+    decoded = decode_wav_g711(payload)
+    if decoded is None or not decoded[2]:
+        return [("", 0, 0, 0, 0, 0)]
+    rate, codec, samples = decoded
+    arr = np.asarray(samples, dtype=np.int64)
+    return [(codec, rate, len(arr), int(arr.sum()), int(arr.min()), int(arr.max()))]
 
 
 AUDIO_SAMPLE_SCHEMA = T.StructType(
@@ -1426,54 +1178,26 @@ AUDIO_SAMPLE_SCHEMA = T.StructType(
 )
 
 
-def synthesize_wav_pcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE mono 16-bit PCM WAV files,
-    deterministic and closed-form in the id: rate = RATES[id % 4],
-    n_samples = id % 200 + 1, sample[i] = (id*7919 + i*31) % 65536
-    - 32768 — so an oracle recomputes amplitude statistics without ever
-    seeing the bytes."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 200 + 1
-                samples = [(i * 7919 + j * 31) % 65536 - 32768 for j in range(n)]
-                payloads.append(make_wav_pcm(_SYNTH_RATES[i % 4], samples))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+def wav_pcm_payload(i: int) -> bytes:
+    """COMPLETE mono 16-bit PCM WAV file, deterministic and closed-form in
+    the id: rate = RATES[id % 4], n_samples = id % 200 + 1, sample[i] =
+    (id*7919 + i*31) % 65536 - 32768 — so an oracle recomputes amplitude
+    statistics without ever seeing the bytes."""
+    samples = [(i * 7919 + j * 31) % 65536 - 32768 for j in range(i % 200 + 1)]
+    return make_wav_pcm(_SYNTH_RATES[i % 4], samples)
 
 
-def synthesize_wav_stereo_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE stereo 16-bit PCM WAV files,
-    closed-form in the id: rate = RATES[id % 4], n = id % 120 + 1,
-    left[j] = (id*53 + j*17) % 65536 - 32768, right[j] =
-    (id*29 + j*41) % 65536 - 32768 — distinct per-channel formulas, so
-    any interleave error (channel swap, off-by-one frame) breaks the
-    per-channel sums AND the cross-channel dot product."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 120 + 1
-                left = [(i * 53 + j * 17) % 65536 - 32768 for j in range(n)]
-                right = [(i * 29 + j * 41) % 65536 - 32768 for j in range(n)]
-                payloads.append(make_wav_pcm_stereo(_SYNTH_RATES[i % 4], left, right))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+def wav_stereo_payload(i: int) -> bytes:
+    """COMPLETE stereo 16-bit PCM WAV file, closed-form in the id: rate =
+    RATES[id % 4], n = id % 120 + 1, left[j] = (id*53 + j*17) % 65536 -
+    32768, right[j] = (id*29 + j*41) % 65536 - 32768 — distinct
+    per-channel formulas, so any interleave error (channel swap,
+    off-by-one frame) breaks the per-channel sums AND the cross-channel
+    dot product."""
+    n = i % 120 + 1
+    left = [(i * 53 + j * 17) % 65536 - 32768 for j in range(n)]
+    right = [(i * 29 + j * 41) % 65536 - 32768 for j in range(n)]
+    return make_wav_pcm_stereo(_SYNTH_RATES[i % 4], left, right)
 
 
 STEREO_STATS_SCHEMA = T.StructType(
@@ -1490,107 +1214,55 @@ STEREO_STATS_SCHEMA = T.StructType(
 )
 
 
-def extract_stereo_sample_stats(binary_df: DataFrame) -> DataFrame:
-    """Per-channel amplitude stats plus the cross-channel dot product
-    over fully-decoded STEREO PCM payloads (decode_wav_pcm_channels),
-    executor-side in mapInPandas. The dot product pins frame ALIGNMENT:
-    a one-frame slip or L/R swap changes it even when per-channel sums
-    survive."""
+def stereo_sample_rows(payload: bytes) -> list[tuple]:
+    """STEREO_STATS_SCHEMA per-channel amplitude stats plus the
+    cross-channel dot product of a fully-decoded STEREO PCM payload
+    (decode_wav_pcm_channels). The dot product pins frame ALIGNMENT: a
+    one-frame slip or L/R swap changes it even when per-channel sums
+    survive. int64 before the multiply so the product can't wrap."""
+    import numpy as np
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {k: [] for k in ("sample_rate", "n_frames", "sum_left", "sum_right", "min_left", "max_right", "dot_lr")}
-            for payload in pdf["payload"]:
-                decoded = decode_wav_pcm_channels(payload)
-                if decoded is None or len(decoded[1]) != 2 or not decoded[1][0]:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                rate, (left, right) = decoded
-                # numpy reductions + dot (int64 before multiply so the
-                # product can't wrap) — r9 judge item 5 sweep
-                la = np.asarray(left, dtype=np.int64)
-                ra = np.asarray(right, dtype=np.int64)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(len(la))
-                out["sum_left"].append(int(la.sum()))
-                out["sum_right"].append(int(ra.sum()))
-                out["min_left"].append(int(la.min()))
-                out["max_right"].append(int(ra.max()))
-                out["dot_lr"].append(int(la @ ra))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "sample_rate": pd.Series(out["sample_rate"], dtype="int32"),
-                    "n_frames": pd.Series(out["n_frames"], dtype="int64"),
-                    "sum_left": pd.Series(out["sum_left"], dtype="int64"),
-                    "sum_right": pd.Series(out["sum_right"], dtype="int64"),
-                    "min_left": pd.Series(out["min_left"], dtype="int32"),
-                    "max_right": pd.Series(out["max_right"], dtype="int32"),
-                    "dot_lr": pd.Series(out["dot_lr"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, STEREO_STATS_SCHEMA)
+    decoded = decode_wav_pcm_channels(payload)
+    if decoded is None or len(decoded[1]) != 2 or not decoded[1][0]:
+        return [(0,) * 7]
+    rate, (left, right) = decoded
+    la = np.asarray(left, dtype=np.int64)
+    ra = np.asarray(right, dtype=np.int64)
+    return [
+        (
+            rate,
+            len(la),
+            int(la.sum()),
+            int(ra.sum()),
+            int(la.min()),
+            int(ra.max()),
+            int(la @ ra),
+        )
+    ]
 
 
-def extract_audio_sample_stats(binary_df: DataFrame) -> DataFrame:
-    """(doc_id, sample_rate, n_samples, sum_amp, min_amp, max_amp,
-    sum_sq) by DECODING each PCM payload's sample data executor-side —
-    the audio twin of extract_pixel_stats: real amplitude work inside
-    mapInPandas, fixed-width integer stats out (sum_sq is the energy
-    integral a loudness/VAD pass needs; integers keep the oracle hash
-    exact). Unsupported payloads yield zero rows of stats.
+def _amplitude_row(rate: int, arr) -> tuple:
+    """AUDIO_SAMPLE_SCHEMA values of an int64 sample array: sum_sq is the
+    energy integral a loudness/VAD pass needs; integers keep the oracle
+    hash exact. int64 BEFORE squaring so the multiply can't wrap."""
+    if not len(arr):
+        return (rate, 0, 0, 0, 0, 0)
+    return (rate, len(arr), int(arr.sum()), int(arr.min()), int(arr.max()), int((arr * arr).sum()))
 
-    Amplitude reductions are numpy axis ops over the raw int16 slice
-    (``np.frombuffer`` — no per-sample Python, no intermediate list;
-    int64 BEFORE squaring so the multiply can't wrap). Same integers
-    out, so the oracle hash is unchanged (r9 judge item 5 sweep)."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+def pcm_sample_rows(payload: bytes) -> list[tuple]:
+    """AUDIO_SAMPLE_SCHEMA stats by DECODING a PCM payload's sample data —
+    the audio twin of the pixel tier: real amplitude work, fixed-width
+    integer stats out. The reductions are numpy ops over the raw int16
+    slice (``np.frombuffer`` — no per-sample Python, no intermediate
+    list). Unsupported payloads yield a row of zeros."""
+    import numpy as np
 
-        for pdf in batches:
-            cols = {
-                k: []
-                for k in (
-                    "sample_rate",
-                    "n_samples",
-                    "sum_amp",
-                    "min_amp",
-                    "max_amp",
-                    "sum_sq",
-                )
-            }
-            for payload in pdf["payload"]:
-                decoded = decode_wav_pcm_raw(payload)
-                if not decoded or not decoded[1]:
-                    for k in cols:
-                        cols[k].append(0)
-                    continue
-                rate, raw = decoded
-                arr = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                cols["sample_rate"].append(rate)
-                cols["n_samples"].append(len(arr))
-                cols["sum_amp"].append(int(arr.sum()))
-                cols["min_amp"].append(int(arr.min()))
-                cols["max_amp"].append(int(arr.max()))
-                cols["sum_sq"].append(int((arr * arr).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "sample_rate": pd.Series(cols["sample_rate"], dtype="int32"),
-                    "n_samples": pd.Series(cols["n_samples"], dtype="int64"),
-                    "sum_amp": pd.Series(cols["sum_amp"], dtype="int64"),
-                    "min_amp": pd.Series(cols["min_amp"], dtype="int32"),
-                    "max_amp": pd.Series(cols["max_amp"], dtype="int32"),
-                    "sum_sq": pd.Series(cols["sum_sq"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, AUDIO_SAMPLE_SCHEMA)
+    decoded = decode_wav_pcm_raw(payload)
+    if not decoded or not decoded[1]:
+        return [(0,) * 6]
+    rate, raw = decoded
+    return [_amplitude_row(rate, np.frombuffer(raw, dtype="<i2").astype(np.int64))]
 
 
 AUDIO_ENERGY_WINDOW_SCHEMA = T.StructType(
@@ -1604,88 +1276,39 @@ AUDIO_ENERGY_WINDOW_SCHEMA = T.StructType(
 )
 
 
-def extract_audio_energy_windows(binary_df: DataFrame, window: int = 16) -> DataFrame:
-    """FRAME-LEVEL energy relation: decode each PCM payload and emit one
-    row per fixed ``window``-sample frame — (doc_id, window_id,
-    n_in_window, sum_amp, sum_sq). This is the framing step every audio
-    featurization pipeline runs before spectral work (VAD, loudness
-    normalization, MFCC windows), and the one media shape the per-doc
-    stats entries don't exercise: a decode that FANS OUT rows inside
-    mapInPandas (media file -> frame relation), so downstream windowed
+def audio_energy_rows(payload: bytes, window: int = 16) -> list[tuple]:
+    """FRAME-LEVEL energy relation: decode a PCM payload and emit one
+    AUDIO_ENERGY_WINDOW_SCHEMA row per fixed ``window``-sample frame —
+    (window_id, n_in_window, sum_amp, sum_sq). This is the framing step
+    every audio featurization pipeline runs before spectral work (VAD,
+    loudness normalization, MFCC windows), and a decode that FANS OUT
+    rows (media file -> frame relation), so downstream windowed
     analytics stay ordinary DataFrame ops. Map-only — no shuffle; frame
     rows inherit the input's partitioning with a doc's frames
     contiguous. Integer-only outputs keep the oracle hash exact; the
     last window is short when n_samples % window != 0 (n_in_window says
     so). Unsupported payloads contribute zero rows.
 
-    Kernel is VECTORIZED (r9 judge item 5): the raw int16 slice goes
+    Kernel is VECTORIZED per document: the raw int16 slice goes
     ``np.frombuffer`` → zero-pad to a window multiple → ``reshape(-1,
     window)`` → axis-1 sums. Zero padding is reduction-neutral for both
     sum and sum-of-squares, so the short last window needs no special
     case beyond its n_in_window. int64 BEFORE squaring — a same-dtype
-    numpy multiply would wrap int16. The old per-sample Python loop was
-    50×+ slower per core; all amplitude values are exact integers, so
-    the oracle hash is unchanged by construction."""
+    numpy multiply would wrap int16."""
+    import numpy as np
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            per_doc = []  # (doc_id, nwin, n_last, sums, sqs)
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                decoded = decode_wav_pcm_raw(payload)
-                if not decoded or not decoded[1]:
-                    continue
-                arr = np.frombuffer(decoded[1], dtype="<i2").astype(np.int64)
-                nwin = -(-len(arr) // window)
-                padded = np.zeros(nwin * window, dtype=np.int64)
-                padded[: len(arr)] = arr
-                mat = padded.reshape(nwin, window)
-                per_doc.append(
-                    (
-                        int(doc_id),
-                        nwin,
-                        len(arr) - (nwin - 1) * window,
-                        mat.sum(axis=1),
-                        (mat * mat).sum(axis=1),
-                    )
-                )
-            if not per_doc:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series([], dtype="int64"),
-                        "window_id": pd.Series([], dtype="int32"),
-                        "n_in_window": pd.Series([], dtype="int64"),
-                        "sum_amp": pd.Series([], dtype="int64"),
-                        "sum_sq": pd.Series([], dtype="int64"),
-                    }
-                )
-                continue
-            ids = np.concatenate(
-                [np.full(nwin, did, dtype=np.int64) for did, nwin, _, _, _ in per_doc]
-            )
-            wids = np.concatenate(
-                [np.arange(nwin, dtype=np.int32) for _, nwin, _, _, _ in per_doc]
-            )
-            ns = np.concatenate(
-                [
-                    np.concatenate(
-                        [np.full(nwin - 1, window, dtype=np.int64), [n_last]]
-                    )
-                    for _, nwin, n_last, _, _ in per_doc
-                ]
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "window_id": wids,
-                    "n_in_window": ns,
-                    "sum_amp": np.concatenate([d[3] for d in per_doc]),
-                    "sum_sq": np.concatenate([d[4] for d in per_doc]),
-                }
-            )
-
-    return binary_df.mapInPandas(_frames, AUDIO_ENERGY_WINDOW_SCHEMA)
+    decoded = decode_wav_pcm_raw(payload)
+    if not decoded or not decoded[1]:
+        return []
+    arr = np.frombuffer(decoded[1], dtype="<i2").astype(np.int64)
+    nwin = -(-len(arr) // window)
+    padded = np.zeros(nwin * window, dtype=np.int64)
+    padded[: len(arr)] = arr
+    mat = padded.reshape(nwin, window)
+    sizes = [window] * (nwin - 1) + [len(arr) - (nwin - 1) * window]
+    return list(
+        zip(range(nwin), sizes, mat.sum(axis=1).tolist(), (mat * mat).sum(axis=1).tolist())
+    )
 
 
 AUDIO_HEADER_SCHEMA = T.StructType(
@@ -1701,59 +1324,20 @@ AUDIO_HEADER_SCHEMA = T.StructType(
 _SYNTH_RATES = (8000, 16000, 22050, 44100)
 
 
-def synthesize_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with REAL RIFF/WAVE header bytes, deterministic
-    per id: rate = RATES[id % 4], channels = id % 2 + 1, 16-bit,
-    n_frames = id % 1000 + 1; every third payload carries a LIST junk
-    chunk before fmt. Closed-form in the id so an oracle recomputes the
-    expected parse independently."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": [
-                        make_wav_header(
-                            _SYNTH_RATES[i % 4],
-                            int(i % 2 + 1),
-                            16,
-                            int(i % 1000 + 1),
-                            junk=(i % 3 == 0),
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+def wav_header_payload(i: int) -> bytes:
+    """REAL RIFF/WAVE header bytes, deterministic per id: rate =
+    RATES[id % 4], channels = id % 2 + 1, 16-bit, n_frames = id % 1000 +
+    1; every third payload carries a LIST junk chunk before fmt.
+    Closed-form in the id so an oracle recomputes the expected parse
+    independently."""
+    return make_wav_header(_SYNTH_RATES[i % 4], i % 2 + 1, 16, i % 1000 + 1, junk=(i % 3 == 0))
 
 
-def extract_audio_headers(binary_df: DataFrame) -> DataFrame:
-    """(doc_id, channels, sample_rate, bits, n_frames) via the pure-
-    Python RIFF walk inside mapInPandas — the audio metadata twin of
-    extract_image_headers."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_wav_header(p) or (0, 0, 0, 0) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "channels": pd.Series([c for c, _, _, _ in parsed], dtype="int32"),
-                    "sample_rate": pd.Series(
-                        [r for _, r, _, _ in parsed], dtype="int32"
-                    ),
-                    "bits": pd.Series([b for _, _, b, _ in parsed], dtype="int32"),
-                    "n_frames": pd.Series([n for _, _, _, n in parsed], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_parse, AUDIO_HEADER_SCHEMA)
+def audio_header_rows(payload: bytes) -> list[tuple]:
+    """AUDIO_HEADER_SCHEMA (channels, sample_rate, bits, n_frames) via the
+    pure-Python RIFF walk — the audio metadata twin of
+    image_header_rows."""
+    return [parse_wav_header(payload) or (0, 0, 0, 0)]
 
 
 def make_bmp_image(width, height, pixel, top_down: bool = False) -> bytes:
@@ -1852,82 +1436,52 @@ PIXEL_STATS_SCHEMA = T.StructType(
 )
 
 
-def synthesize_bmp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) where payload is a COMPLETE uncompressed 24-bit
-    BMP file, deterministic and closed-form in the id: width = id%16+1,
-    height = id*3%12+1, pixel(x, y) = ((id+x)%256, (id+y)%256,
-    (id+x*y)%256); every 5th document is stored top-down (negative
-    biHeight) so the decoder's row-order normalization is exercised.
-    Closed-form pixel values let an oracle recompute the expected
-    channel sums independently — without ever seeing the bytes."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 16 + 1, i * 3 % 12 + 1
-                payloads.append(
-                    make_bmp_image(
-                        w,
-                        h,
-                        lambda x, y, i=i: ((i + x) % 256, (i + y) % 256, (i + x * y) % 256),
-                        top_down=(i % 5 == 0),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+def bmp_payload(i: int) -> bytes:
+    """COMPLETE uncompressed 24-bit BMP file, deterministic and
+    closed-form in the id: width = id%16+1, height = id*3%12+1,
+    pixel(x, y) = ((id+x)%256, (id+y)%256, (id+x*y)%256); every 5th
+    document is stored top-down (negative biHeight) so the decoder's
+    row-order normalization is exercised. Closed-form pixel values let
+    an oracle recompute the expected channel sums independently —
+    without ever seeing the bytes."""
+    return make_bmp_image(
+        i % 16 + 1,
+        i * 3 % 12 + 1,
+        lambda x, y: ((i + x) % 256, (i + y) % 256, (i + x * y) % 256),
+        top_down=(i % 5 == 0),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
-def extract_pixel_stats(binary_df: DataFrame) -> DataFrame:
-    """(doc_id, width, height, n_pixels, sum_r, sum_g, sum_b) by FULLY
-    decoding each BMP payload's pixel array inside mapInPandas — the
-    pixel tier of X9 (r5 judge item 3): byte-level decode runs
-    executor-side over Arrow batches, and only fixed-width stats cross
-    back. Swapping decode_bmp_pixels for a real codec library changes
-    nothing about the distributed shape. Unrecognized payloads yield
-    zero dims/sums rather than failing the batch."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_bmp_pixels(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, rows = decoded
-                sr = sg = sb = 0
-                for row in rows:
-                    for r, g, b in row:
-                        sr += r
-                        sg += g
-                        sb += b
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
+def rgb_pixel_rows(
+    payload: bytes,
+    decode: Callable[[bytes], tuple | None],
+    resize_to: tuple[int, int] | None = None,
+    method: str = "bilinear",
+) -> list[tuple]:
+    """PIXEL_STATS_SCHEMA (width, height, n_pixels, sum_r, sum_g, sum_b)
+    of a payload ``decode`` turns into (w, h, rows of (r, g, b)) — the
+    channel-sum measure every RGB pixel tier shares: decode_bmp_pixels,
+    decode_png_pixels, decode_gif_pixels, decode_tiff_pixels, or the
+    any-format decode_image_pixels. ``resize_to=(w, h)`` first resamples
+    with the exact fixed-point ``resize_pixels`` (the thumbnail/
+    normalize stage of an image training pipeline) and reports the
+    DESTINATION dims, so downstream consumers see the normalized
+    geometry. Unrecognized payloads yield zero dims/sums rather than
+    failing the batch."""
+    decoded = decode(payload)
+    if decoded is None:
+        return [(0,) * 6]
+    w, h, rows = decoded
+    if resize_to is not None:
+        w, h = resize_to
+        rows = resize_pixels(rows, w, h, method=method)
+    sr = sg = sb = 0
+    for row in rows:
+        for r, g, b in row:
+            sr += r
+            sg += g
+            sb += b
+    return [(w, h, w * h, sr, sg, sb)]
 
 
 def _gif_lzw_encode(indices: list[int], min_code_size: int) -> bytes:
@@ -2172,98 +1726,24 @@ def decode_gif_pixels(data: bytes) -> tuple[int, int, list[list[tuple[int, int, 
     )
 
 
-def synthesize_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid GIF89a files, closed-form
-    in the id: width = id%11+1, height = id*3%9+1, palette index at
-    (x, y) = (id + 3x + 5y) % 256, palette ``_gif_palette``. Repeated
-    indices along rows make the LZW table genuinely grow, so decoding
-    exercises multi-width code reads, not just singletons."""
+def gif_payload(i: int) -> bytes:
+    """COMPLETE valid GIF89a file, closed-form in the id: width =
+    id%11+1, height = id*3%9+1, palette index at (x, y) = (id + 3x + 5y)
+    % 256, palette ``_gif_palette``. Repeated indices along rows make
+    the LZW table genuinely grow, so decoding exercises multi-width code
+    reads, not just singletons."""
+    return make_gif_image(i % 11 + 1, i * 3 % 9 + 1, lambda x, y: (i + 3 * x + 5 * y) % 256)
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 11 + 1, i * 3 % 9 + 1
-                payloads.append(
-                    make_gif_image(w, h, lambda x, y, i=i: (i + 3 * x + 5 * y) % 256)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+def gif_interlaced_payload(i: int) -> bytes:
+    """COMPLETE valid INTERLACED GIF89a file (image-descriptor flag 0x40,
+    rows LZW-encoded in the §20 four-pass order), closed-form in the id:
+    width = id%9+1, height = (id*5)%13+2 (≥2 rows so at least two passes
+    carry data; up to 14 rows exercises all four), palette index at
+    (x, y) = (id + 2x + 7y) % 256."""
+    return make_gif_image(
+        i % 9 + 1, i * 5 % 13 + 2, lambda x, y: (i + 2 * x + 7 * y) % 256, interlace=True
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
-
-
-def synthesize_gif_interlaced_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid INTERLACED GIF89a files
-    (image-descriptor flag 0x40, rows LZW-encoded in the §20 four-pass
-    order), closed-form in the id: width = id%9+1, height = (id*5)%13+2
-    (≥2 rows so at least two passes carry data; up to 14 rows exercises
-    all four), palette index at (x, y) = (id + 2x + 7y) % 256."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 9 + 1, i * 5 % 13 + 2
-                payloads.append(
-                    make_gif_image(
-                        w, h, lambda x, y, i=i: (i + 2 * x + 7 * y) % 256, interlace=True
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
-
-
-def extract_gif_pixel_stats(binary_df: DataFrame) -> DataFrame:
-    """PIXEL_STATS_SCHEMA stats over fully-decoded GIF payloads — the
-    LZW twin of extract_png_pixel_stats: de-sub-block + LZW decompress +
-    palette lookup + channel sums, all executor-side in mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_gif_pixels(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, rows = decoded
-                sr = sg = sb = 0
-                for row in rows:
-                    for r, g, b in row:
-                        sr += r
-                        sg += g
-                        sb += b
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
 
 
 def resize_pixels(
@@ -3293,34 +2773,17 @@ def decode_jpeg_pixels(data: bytes) -> tuple[int, int, list[list[int]]] | None:
         return None
     width, height, (plane,) = decoded
     return (width, height, [list(map(int, row)) for row in plane])
-def synthesize_jpeg_color_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid baseline 4:4:4 COLOR
-    JPEGs, closed-form in the id: width = id%20+1, height = id*3%18+1,
-    and the 8x8 block at (bx, by) is the constant color
-    R=(id+5bx+11by)%256, G=(id*3+7bx+by)%256, B=(id*7+bx+13by)%256.
-    With DC quantization step 8 in both tables, constant blocks
-    reconstruct their YCbCr values exactly, so the decoded RGB equals
-    the exact fixed-point roundtrip _fx_ycbcr_to_rgb(_fx_rgb_to_ycbcr)
-    — deterministic integer arithmetic an oracle can replay."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                _encode_jpeg_color_planes(
-                    int(i) % 20 + 1,
-                    int(i) * 3 % 18 + 1,
-                    *_closed_form_color_planes(int(i), int(i) % 20 + 1, int(i) * 3 % 18 + 1, 8, False),
-                    False,
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+def jpeg_color_payload(i: int) -> bytes:
+    """COMPLETE valid baseline 4:4:4 COLOR JPEG, closed-form in the id:
+    width = id%20+1, height = id*3%18+1, and the 8x8 block at (bx, by) is
+    the constant color R=(id+5bx+11by)%256, G=(id*3+7bx+by)%256,
+    B=(id*7+bx+13by)%256. With DC quantization step 8 in both tables,
+    constant blocks reconstruct their YCbCr values exactly, so the
+    decoded RGB equals the exact fixed-point roundtrip
+    _fx_ycbcr_to_rgb(_fx_rgb_to_ycbcr) — deterministic integer
+    arithmetic an oracle can replay."""
+    w, h = i % 20 + 1, i * 3 % 18 + 1
+    return _encode_jpeg_color_planes(w, h, *_closed_form_color_planes(i, w, h, 8, False), False)
 
 
 def _closed_form_color_planes(i: int, w: int, h: int, tile: int, sub: bool):
@@ -3347,72 +2810,28 @@ def _closed_form_color_planes(i: int, w: int, h: int, tile: int, sub: bool):
     return yv, cb, cr
 
 
-def synthesize_jpeg420_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid baseline 4:2:0 COLOR
-    JPEGs, closed-form in the id: width = id%24+1, height = id*3%20+1,
-    and the 16x16 MCU tile at (tx, ty) is the constant color
-    R=(id+5tx+11ty)%256, G=(id*3+7tx+ty)%256, B=(id*7+tx+13ty)%256.
-    Constant 16x16 tiles survive the half-up 2x2 chroma box average,
-    DC-step-8 quantization, and replication upsample EXACTLY, so the
-    decoded RGB equals the fixed-point YCbCr roundtrip — the same
-    oracle contract as the 4:4:4 tier, now through the subsampled MCU
-    layout real-world JPEGs use."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                _encode_jpeg_color_planes(
-                    int(i) % 24 + 1,
-                    int(i) * 3 % 20 + 1,
-                    *_closed_form_color_planes(int(i), int(i) % 24 + 1, int(i) * 3 % 20 + 1, 16, True),
-                    True,
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+def jpeg420_payload(i: int) -> bytes:
+    """COMPLETE valid baseline 4:2:0 COLOR JPEG, closed-form in the id:
+    width = id%24+1, height = id*3%20+1, and the 16x16 MCU tile at (tx,
+    ty) is the constant color R=(id+5tx+11ty)%256, G=(id*3+7tx+ty)%256,
+    B=(id*7+tx+13ty)%256. Constant 16x16 tiles survive the half-up 2x2
+    chroma box average, DC-step-8 quantization, and replication upsample
+    EXACTLY, so the decoded RGB equals the fixed-point YCbCr roundtrip —
+    the same oracle contract as the 4:4:4 tier, now through the
+    subsampled MCU layout real-world JPEGs use."""
+    w, h = i % 24 + 1, i * 3 % 20 + 1
+    return _encode_jpeg_color_planes(w, h, *_closed_form_color_planes(i, w, h, 16, True), True)
 
 
-def extract_jpeg_color_pixel_stats(binary_df: DataFrame) -> DataFrame:
-    """PIXEL_STATS_SCHEMA stats over fully-decoded baseline COLOR JPEG
-    payloads — interleaved-MCU Huffman decode, two quantization tables,
-    IDCT, fixed-point YCbCr->RGB, channel sums, all executor-side in
-    mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_jpeg_color_arrays(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, (r, g, b) = decoded
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(int(r.sum()))
-                out["sum_g"].append(int(g.sum()))
-                out["sum_b"].append(int(b.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
+def jpeg_color_rows(payload: bytes) -> list[tuple]:
+    """PIXEL_STATS_SCHEMA stats of a fully-decoded baseline COLOR JPEG
+    payload — interleaved-MCU Huffman decode, two quantization tables,
+    IDCT, fixed-point YCbCr->RGB, channel sums over the numpy planes."""
+    decoded = decode_jpeg_color_arrays(payload)
+    if decoded is None:
+        return [(0,) * 6]
+    w, h, (r, g, b) = decoded
+    return [(w, h, w * h, int(r.sum()), int(g.sum()), int(b.sum()))]
 
 
 LUMA_STATS_SCHEMA = T.StructType(
@@ -3428,79 +2847,38 @@ LUMA_STATS_SCHEMA = T.StructType(
 )
 
 
-def synthesize_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid baseline grayscale JPEGs,
-    closed-form in the id: width = id%20+1, height = id*3%18+1, and the
-    8x8 block at (bx, by) is the CONSTANT even value
-    2*((id + 3*bx + 7*by) % 128). Per-block-constant even-valued images
-    quantize to DC-only coefficients with zero rounding loss (q00 = 16,
-    DC = 8*(v-128) with v-128 even), so the lossy pipeline reconstructs
-    them bit-exactly — which is what makes the decoded output
-    oracle-recomputable while the decoder stays a general baseline
-    JPEG decoder. DC DPCM still varies across blocks, so the Huffman
-    stream is non-trivial. Every fourth file carries DRI/RSTn restart
-    markers (interval 2 MCUs — late r7): decoded pixels are identical
-    by construction, so the SAME oracle hash now also gates the
-    restart-marker path (byte-aligned resync, DC predictor resets, the
-    modulo-8 marker sequence)."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 20 + 1, i * 3 % 18 + 1
-                payloads.append(
-                    make_jpeg_image(
-                        w,
-                        h,
-                        lambda x, y, i=i: 2 * ((i + 3 * (x // 8) + 7 * (y // 8)) % 128),
-                        restart_interval=2 if i % 4 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+def jpeg_payload(i: int) -> bytes:
+    """COMPLETE valid baseline grayscale JPEG, closed-form in the id:
+    width = id%20+1, height = id*3%18+1, and the 8x8 block at (bx, by)
+    is the CONSTANT even value 2*((id + 3*bx + 7*by) % 128).
+    Per-block-constant even-valued images quantize to DC-only
+    coefficients with zero rounding loss (q00 = 16, DC = 8*(v-128) with
+    v-128 even), so the lossy pipeline reconstructs them bit-exactly —
+    which is what makes the decoded output oracle-recomputable while the
+    decoder stays a general baseline JPEG decoder. DC DPCM still varies
+    across blocks, so the Huffman stream is non-trivial. Every fourth
+    file carries DRI/RSTn restart markers (interval 2 MCUs): decoded
+    pixels are identical by construction, so the SAME oracle hash also
+    gates the restart-marker path (byte-aligned resync, DC predictor
+    resets, the modulo-8 marker sequence)."""
+    return make_jpeg_image(
+        i % 20 + 1,
+        i * 3 % 18 + 1,
+        lambda x, y: 2 * ((i + 3 * (x // 8) + 7 * (y // 8)) % 128),
+        restart_interval=2 if i % 4 == 0 else 0,
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
-def extract_jpeg_luma_stats(binary_df: DataFrame) -> DataFrame:
-    """LUMA_STATS_SCHEMA stats over fully-decoded baseline JPEG
-    payloads: Huffman entropy decode + dequant + IDCT executor-side in
-    mapInPandas, fixed-width luma statistics out."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_luma", "min_luma", "max_luma")}
-            for payload in pdf["payload"]:
-                decoded = _decode_jpeg_planes(payload)
-                if decoded is None or len(decoded[2]) != 1:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, (plane,) = decoded
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_luma"].append(int(plane.sum()))
-                out["min_luma"].append(int(plane.min()))
-                out["max_luma"].append(int(plane.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_luma": pd.Series(out["sum_luma"], dtype="int64"),
-                    "min_luma": pd.Series(out["min_luma"], dtype="int32"),
-                    "max_luma": pd.Series(out["max_luma"], dtype="int32"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, LUMA_STATS_SCHEMA)
+def jpeg_luma_rows(payload: bytes, progressive: bool = False) -> list[tuple]:
+    """LUMA_STATS_SCHEMA stats of a fully-decoded grayscale JPEG payload:
+    baseline (Huffman entropy decode + dequant + IDCT) or, with
+    ``progressive``, the SOF2 successive-approximation pipeline
+    (decode_jpeg_progressive)."""
+    decoded = (decode_jpeg_progressive if progressive else _decode_jpeg_planes)(payload)
+    if decoded is None or len(decoded[2]) != 1:
+        return [(0,) * 6]
+    w, h, (plane,) = decoded
+    return [(w, h, w * h, int(plane.sum()), int(plane.min()), int(plane.max()))]
 
 
 # Universal 8-bit-flat Huffman table for progressive AC scans: all 255
@@ -4028,188 +3406,42 @@ def decode_jpeg_progressive(data: bytes):
     return (width, height, [plane[:height, :width]])
 
 
-def synthesize_jpeg_progressive_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid PROGRESSIVE (SOF2)
-    grayscale JPEGs, closed-form in the id: width = id%19+1, height =
-    (id*5)%17+1, and the 8x8 block at (bx, by) is the CONSTANT even
-    value 2*((id + 5*bx + 11*by) % 128) — the same DC-only zero-loss
-    construction as the baseline luma tier, so the four-scan successive-
-    approximation pipeline reconstructs bit-exactly and the oracle can
-    recompute the stats without seeing a byte. The AC band scans are
-    pure EOBn runs over many blocks, exercising the run accounting."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 19 + 1, i * 5 % 17 + 1
-                payloads.append(
-                    make_jpeg_progressive(
-                        w, h, lambda x, y, i=i: 2 * ((i + 5 * (x // 8) + 11 * (y // 8)) % 128)
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+def jpeg_progressive_payload(i: int) -> bytes:
+    """COMPLETE valid PROGRESSIVE (SOF2) grayscale JPEG, closed-form in
+    the id: width = id%19+1, height = (id*5)%17+1, and the 8x8 block at
+    (bx, by) is the CONSTANT even value 2*((id + 5*bx + 11*by) % 128) —
+    the same DC-only zero-loss construction as the baseline luma tier,
+    so the four-scan successive-approximation pipeline reconstructs
+    bit-exactly and the oracle can recompute the stats without seeing a
+    byte. The AC band scans are pure EOBn runs over many blocks,
+    exercising the run accounting."""
+    return make_jpeg_progressive(
+        i % 19 + 1, i * 5 % 17 + 1, lambda x, y: 2 * ((i + 5 * (x // 8) + 11 * (y // 8)) % 128)
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
-def extract_jpeg_progressive_stats(binary_df: DataFrame) -> DataFrame:
-    """LUMA_STATS_SCHEMA stats over fully-decoded PROGRESSIVE JPEG
-    payloads (decode_jpeg_progressive), executor-side in mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_luma", "min_luma", "max_luma")}
-            for payload in pdf["payload"]:
-                decoded = decode_jpeg_progressive(payload)
-                if decoded is None or len(decoded[2]) != 1:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, (plane,) = decoded
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_luma"].append(int(plane.sum()))
-                out["min_luma"].append(int(plane.min()))
-                out["max_luma"].append(int(plane.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_luma": pd.Series(out["sum_luma"], dtype="int64"),
-                    "min_luma": pd.Series(out["min_luma"], dtype="int32"),
-                    "max_luma": pd.Series(out["max_luma"], dtype="int32"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, LUMA_STATS_SCHEMA)
+def adpcm_payload(i: int) -> bytes:
+    """COMPLETE IMA ADPCM WAV file compressing the SAME closed-form source
+    signal as the PCM tier (rate = RATES[id % 4], n = id % 200 + 1,
+    sample[j] = (id*7919 + j*31) % 65536 - 32768), so the lossy
+    encode→decode recurrence is fully determined by the id — which is
+    what lets the oracle replay it."""
+    samples = [(i * 7919 + j * 31) % 65536 - 32768 for j in range(i % 200 + 1)]
+    return make_wav_ima_adpcm(_SYNTH_RATES[i % 4], samples)
 
 
-def synthesize_adpcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE IMA ADPCM WAV files compressing
-    the SAME closed-form source signal as the PCM tier (rate =
-    RATES[id % 4], n = id % 200 + 1, sample[j] = (id*7919 + j*31) %
-    65536 - 32768), so the lossy encode→decode recurrence is fully
-    determined by the id — which is what lets the oracle replay it."""
+def adpcm_sample_rows(payload: bytes) -> list[tuple]:
+    """AUDIO_SAMPLE_SCHEMA stats of a fully-decoded IMA ADPCM payload —
+    the lossy-codec twin of pcm_sample_rows: RIFF walk, block-header
+    parse, nibble decompression (predictor-recursive, so sequential),
+    then one numpy pass for the reductions."""
+    import numpy as np
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 200 + 1
-                samples = [(i * 7919 + j * 31) % 65536 - 32768 for j in range(n)]
-                payloads.append(make_wav_ima_adpcm(_SYNTH_RATES[i % 4], samples))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
-
-
-def extract_adpcm_sample_stats(binary_df: DataFrame) -> DataFrame:
-    """AUDIO_SAMPLE_SCHEMA stats over fully-decoded IMA ADPCM payloads
-    — the lossy-codec twin of extract_audio_sample_stats: RIFF walk,
-    block-header parse, nibble decompression, amplitude reduction, all
-    executor-side in mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            cols = {
-                k: []
-                for k in ("sample_rate", "n_samples", "sum_amp", "min_amp", "max_amp", "sum_sq")
-            }
-            for payload in pdf["payload"]:
-                decoded = decode_wav_ima_adpcm(payload)
-                if decoded is None:
-                    for k in cols:
-                        cols[k].append(0)
-                    continue
-                rate, samples = decoded
-                # nibble decompression is predictor-recursive (cannot
-                # vectorize), but the reductions need not re-walk the
-                # list four times in Python (r9 judge item 5 sweep)
-                arr = np.asarray(samples, dtype=np.int64)
-                cols["sample_rate"].append(rate)
-                cols["n_samples"].append(len(arr))
-                cols["sum_amp"].append(int(arr.sum()) if len(arr) else 0)
-                cols["min_amp"].append(int(arr.min()) if len(arr) else 0)
-                cols["max_amp"].append(int(arr.max()) if len(arr) else 0)
-                cols["sum_sq"].append(int((arr * arr).sum()) if len(arr) else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "sample_rate": pd.Series(cols["sample_rate"], dtype="int32"),
-                    "n_samples": pd.Series(cols["n_samples"], dtype="int64"),
-                    "sum_amp": pd.Series(cols["sum_amp"], dtype="int64"),
-                    "min_amp": pd.Series(cols["min_amp"], dtype="int32"),
-                    "max_amp": pd.Series(cols["max_amp"], dtype="int32"),
-                    "sum_sq": pd.Series(cols["sum_sq"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, AUDIO_SAMPLE_SCHEMA)
-
-
-def extract_resized_pixel_stats(
-    binary_df: DataFrame, dst_w: int, dst_h: int, method: str = "bilinear"
-) -> DataFrame:
-    """PIXEL_STATS_SCHEMA stats over payloads decoded AND resampled to
-    (dst_w, dst_h) — the thumbnail/normalize stage of an image training
-    pipeline: decode (``decode_image_pixels`` — BMP/PNG/GIF/TIFF and
-    baseline/progressive JPEG), exact fixed-point resize
-    (``resize_pixels``), channel sums, all executor-side in mapInPandas.
-    The reported width/height are the DESTINATION dims, so downstream
-    consumers see the normalized geometry."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_image_pixels(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                _w, _h, rows = decoded
-                resized = resize_pixels(rows, dst_w, dst_h, method=method)
-                sr = sg = sb = 0
-                for row in resized:
-                    for r, g, b in row:
-                        sr += r
-                        sg += g
-                        sb += b
-                out["width"].append(dst_w)
-                out["height"].append(dst_h)
-                out["n_pixels"].append(dst_w * dst_h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
+    decoded = decode_wav_ima_adpcm(payload)
+    if decoded is None:
+        return [(0,) * 6]
+    rate, samples = decoded
+    return [_amplitude_row(rate, np.asarray(samples, dtype=np.int64))]
 
 
 def _packbits_encode(data: bytes) -> bytes:
@@ -4432,81 +3664,19 @@ def decode_tiff_pixels(data: bytes) -> tuple[int, int, list[list[tuple[int, int,
     )
 
 
-def synthesize_tiff_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid TIFF files, closed-form in
-    the id: width = id%13+1, height = (id*7)%11+1, pixel(x, y) =
-    ((id + 7x) % 256, (id*3 + 5y) % 256, (id + 2x + 3y) % 256);
-    byte order alternates by id (even II, odd MM) and every third file
-    is PackBits-compressed — one relation exercising both endiannesses
-    AND the RLE codec."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 13 + 1, i * 7 % 11 + 1
-                payloads.append(
-                    make_tiff_image(
-                        w,
-                        h,
-                        lambda x, y, i=i: (
-                            (i + 7 * x) % 256,
-                            (i * 3 + 5 * y) % 256,
-                            (i + 2 * x + 3 * y) % 256,
-                        ),
-                        big_endian=bool(i % 2),
-                        packbits=(i % 3 == 0),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+def tiff_payload(i: int) -> bytes:
+    """COMPLETE valid TIFF file, closed-form in the id: width = id%13+1,
+    height = (id*7)%11+1, pixel(x, y) = ((id + 7x) % 256, (id*3 + 5y) %
+    256, (id + 2x + 3y) % 256); byte order alternates by id (even II,
+    odd MM) and every third file is PackBits-compressed — one relation
+    exercising both endiannesses AND the RLE codec."""
+    return make_tiff_image(
+        i % 13 + 1,
+        i * 7 % 11 + 1,
+        lambda x, y: ((i + 7 * x) % 256, (i * 3 + 5 * y) % 256, (i + 2 * x + 3 * y) % 256),
+        big_endian=bool(i % 2),
+        packbits=(i % 3 == 0),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
-
-
-def extract_tiff_pixel_stats(binary_df: DataFrame) -> DataFrame:
-    """PIXEL_STATS_SCHEMA stats over fully-decoded TIFF payloads —
-    IFD walk + strip assembly + PackBits, executor-side in mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_tiff_pixels(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, rows = decoded
-                sr = sg = sb = 0
-                for row in rows:
-                    for r, g, b in row:
-                        sr += r
-                        sg += g
-                        sb += b
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
 
 
 def make_avi_mjpeg(width: int, height: int, frames: list[bytes], fps: int = 25) -> bytes:
@@ -4613,36 +3783,20 @@ def decode_avi_mjpeg(data: bytes) -> tuple[int, int, list] | None:
     return (width, height, planes)
 
 
-def synthesize_avi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid MJPEG AVI files, closed-form
-    in the id: n_frames = id%5+1, width = id%14+1, height = (id*3)%12+1,
-    and frame f's 8x8 block at (bx, by) is the constant even value
+def avi_payload(i: int) -> bytes:
+    """COMPLETE valid MJPEG AVI file, closed-form in the id: n_frames =
+    id%5+1, width = id%14+1, height = (id*3)%12+1, and frame f's 8x8
+    block at (bx, by) is the constant even value
     2*((id + 13*f + 3*bx + 7*by) % 128) — the zero-loss JPEG fixture
     construction, per frame, inside a real AVI container."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 14 + 1, i * 3 % 12 + 1
-                frames = [
-                    make_jpeg_image(
-                        w,
-                        h,
-                        lambda x, y, i=i, f=f: 2
-                        * ((i + 13 * f + 3 * (x // 8) + 7 * (y // 8)) % 128),
-                    )
-                    for f in range(i % 5 + 1)
-                ]
-                payloads.append(make_avi_mjpeg(w, h, frames))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+    w, h = i % 14 + 1, i * 3 % 12 + 1
+    frames = [
+        make_jpeg_image(
+            w, h, lambda x, y, f=f: 2 * ((i + 13 * f + 3 * (x // 8) + 7 * (y // 8)) % 128)
+        )
+        for f in range(i % 5 + 1)
+    ]
+    return make_avi_mjpeg(w, h, frames)
 
 
 VIDEO_FRAME_SCHEMA = T.StructType(
@@ -4658,95 +3812,49 @@ VIDEO_FRAME_SCHEMA = T.StructType(
 )
 
 
-def extract_video_frame_stats(binary_df: DataFrame) -> DataFrame:
-    """Per-FRAME luma stats over fully-decoded MJPEG AVI payloads: one
-    input video row fans out to n_frames output rows inside mapInPandas
-    (the keyframe-extraction relation of a video training pipeline —
-    the fan-out never touches the driver), each frame decoded by the
-    real container+codec walk (``decode_avi_mjpeg``)."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, ws, hs, sums, mins, maxs = [], [], [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                decoded = decode_avi_mjpeg(payload)
-                if decoded is None:
-                    continue
-                w, h, planes = decoded
-                for f, plane in enumerate(planes):
-                    ids.append(int(doc_id))
-                    idxs.append(f)
-                    ws.append(w)
-                    hs.append(h)
-                    sums.append(int(plane.sum()))
-                    mins.append(int(plane.min()))
-                    maxs.append(int(plane.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "sum_luma": pd.Series(sums, dtype="int64"),
-                    "min_luma": pd.Series(mins, dtype="int32"),
-                    "max_luma": pd.Series(maxs, dtype="int32"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, VIDEO_FRAME_SCHEMA)
+def video_frame_rows(payload: bytes) -> list[tuple]:
+    """Per-FRAME VIDEO_FRAME_SCHEMA luma stats of a fully-decoded MJPEG
+    AVI payload: one video fans out to n_frames rows (the
+    keyframe-extraction relation of a video training pipeline — the
+    fan-out never touches the driver), each frame decoded by the real
+    container+codec walk (``decode_avi_mjpeg``)."""
+    decoded = decode_avi_mjpeg(payload)
+    if decoded is None:
+        return []
+    w, h, planes = decoded
+    return [(f, w, h, int(p.sum()), int(p.min()), int(p.max())) for f, p in enumerate(planes)]
 
 
-def sample_frames(binary_df: DataFrame, frame_bytes: int = 64, every: int = 4) -> DataFrame:
-    """Every-``every``-th fixed-size frame of a packed video payload.
+def frame_sample_rows(payload: bytes, frame_bytes: int = 64, every: int = 4) -> list[tuple]:
+    """Every-``every``-th fixed-size FRAME_SCHEMA frame of a packed video
+    payload: (frame_idx, frame_n_bytes, frame_byte_sum).
 
     The frame-sampling shape of a video pipeline: one input row fans out
-    to ~n_bytes/(frame_bytes·every) frame rows inside mapInPandas, so the
-    fan-out never materializes on the driver and downstream operators see
-    an ordinary (doc_id, frame_idx, ...) relation they can group/join.
-    With a real container format the fixed-stride slicing becomes
-    keyframe extraction; the distributed shape is identical.
+    to ~n_bytes/(frame_bytes·every) frame rows, so the fan-out never
+    materializes on the driver and downstream operators see an ordinary
+    (doc_id, frame_idx, ...) relation they can group/join. With a real
+    container format the fixed-stride slicing becomes keyframe
+    extraction. Frame sums are vectorized: pad to a frame multiple,
+    reshape, sum axis 1 — zero pad is sum-neutral.
     """
+    import numpy as np
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            sizes: list[int] = []
-            sums: list[int] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = (len(payload) + frame_bytes - 1) // frame_bytes
-                if not n_frames:
-                    continue
-                # vectorized frame sums (r9 judge item 5 sweep): pad to
-                # a frame multiple, reshape, sum axis 1, stride-select —
-                # zero pad is sum-neutral; sizes come from arithmetic
-                arr = np.zeros(n_frames * frame_bytes, dtype=np.int64)
-                arr[: len(payload)] = np.frombuffer(payload, dtype=np.uint8)
-                frame_sums = arr.reshape(n_frames, frame_bytes).sum(axis=1)
-                sel = np.arange(0, n_frames, every)
-                last = len(payload) - (n_frames - 1) * frame_bytes
-                for idx in sel:
-                    ids.append(int(doc_id))
-                    idxs.append(int(idx))
-                    sizes.append(frame_bytes if idx < n_frames - 1 else last)
-                    sums.append(int(frame_sums[idx]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "frame_n_bytes": pd.Series(sizes, dtype="int64"),
-                    "frame_byte_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_frames, FRAME_SCHEMA)
+    n_frames = (len(payload) + frame_bytes - 1) // frame_bytes
+    if not n_frames:
+        return []
+    arr = np.zeros(n_frames * frame_bytes, dtype=np.int64)
+    arr[: len(payload)] = np.frombuffer(payload, dtype=np.uint8)
+    sums = arr.reshape(n_frames, frame_bytes).sum(axis=1).tolist()
+    last = len(payload) - (n_frames - 1) * frame_bytes
+    return [
+        (idx, frame_bytes if idx < n_frames - 1 else last, sums[idx])
+        for idx in range(0, n_frames, every)
+    ]
 
 
 def video_scene_cuts(frame_df: DataFrame, threshold_per_px: int = 16) -> DataFrame:
     """Shot-boundary detection over a decoded frame relation (the
-    output shape of ``extract_video_frame_stats``): per video, count
+    output shape of ``video_frame_rows``): per video, count
     frames, count scene CUTS — inter-frame luma-sum jumps exceeding
     ``threshold_per_px`` per pixel (the comparison is pure integer
     arithmetic: |sum_f - sum_{f-1}| > T*w*h, exact cross-engine) — and

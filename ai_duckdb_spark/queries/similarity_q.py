@@ -6,55 +6,79 @@ binary-column pipeline (X9)."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import similarity as sim
 from ..operators.multimodal import (
+    ALPHA_STATS_SCHEMA,
+    AUDIO_ENERGY_WINDOW_SCHEMA,
+    AUDIO_HEADER_SCHEMA,
+    AUDIO_SAMPLE_SCHEMA,
+    FEATURE_SCHEMA,
+    FRAME_SCHEMA,
+    G711_STATS_SCHEMA,
+    GRAY16_STATS_SCHEMA,
+    HEADER_SCHEMA,
+    LUMA_STATS_SCHEMA,
+    PIXEL_STATS_SCHEMA,
+    STEREO_STATS_SCHEMA,
+    VIDEO_FRAME_SCHEMA,
+    adpcm_payload,
+    adpcm_sample_rows,
     attach_binary_payload,
-    extract_audio_headers,
-    extract_features,
-    extract_image_headers,
-    extract_adpcm_sample_stats,
-    extract_audio_energy_windows,
-    extract_audio_sample_stats,
-    extract_g711_sample_stats,
-    extract_gif_pixel_stats,
-    extract_jpeg_color_pixel_stats,
-    extract_jpeg_luma_stats,
-    extract_jpeg_progressive_stats,
-    extract_pixel_stats,
-    extract_png_alpha_composite_stats,
-    extract_png_gray16_stats,
-    extract_png_pixel_stats,
-    extract_resized_pixel_stats,
-    extract_stereo_sample_stats,
-    extract_tiff_pixel_stats,
-    extract_video_frame_stats,
-    sample_frames,
-    synthesize_avi_payloads,
-    synthesize_adpcm_payloads,
-    synthesize_audio_payloads,
-    synthesize_bmp_payloads,
-    synthesize_gif_payloads,
-    synthesize_image_payloads,
-    synthesize_jpeg420_payloads,
-    synthesize_jpeg_color_payloads,
-    synthesize_jpeg_payloads,
-    synthesize_jpeg_progressive_payloads,
-    synthesize_g711_payloads,
-    synthesize_gif_interlaced_payloads,
-    synthesize_png_gray16_payloads,
-    synthesize_png_interlaced_payloads,
-    synthesize_png_palette_payloads,
-    synthesize_png_payloads,
-    synthesize_png_rgba_payloads,
-    synthesize_wav_pcm_payloads,
-    synthesize_tiff_payloads,
-    synthesize_wav_stereo_payloads,
+    audio_energy_rows,
+    audio_header_rows,
+    avi_payload,
+    bmp_payload,
+    decode_bmp_pixels,
+    decode_gif_pixels,
+    decode_image_pixels,
+    decode_png_pixels,
+    decode_tiff_pixels,
+    feature_rows,
+    frame_sample_rows,
+    g711_payload,
+    g711_sample_rows,
+    gif_interlaced_payload,
+    gif_payload,
+    image_header_payload,
+    image_header_rows,
+    jpeg420_payload,
+    jpeg_color_payload,
+    jpeg_color_rows,
+    jpeg_luma_rows,
+    jpeg_payload,
+    jpeg_progressive_payload,
+    media_pass,
+    pcm_sample_rows,
+    png_alpha_composite_rows,
+    png_gray16_payload,
+    png_gray16_rows,
+    png_interlaced_payload,
+    png_palette_payload,
+    png_payload,
+    png_rgba_payload,
+    rgb_pixel_rows,
+    stereo_sample_rows,
+    tiff_payload,
+    video_frame_rows,
+    wav_header_payload,
+    wav_pcm_payload,
+    wav_stereo_payload,
 )
 from ..tables import load
 from .catalog import register
+
+# RGB channel-sum measures, one per still-image decoder; the 8x4
+# thumbnail decodes any supported format and resamples before summing
+_BMP_RGB = partial(rgb_pixel_rows, decode=decode_bmp_pixels)
+_PNG_RGB = partial(rgb_pixel_rows, decode=decode_png_pixels)
+_GIF_RGB = partial(rgb_pixel_rows, decode=decode_gif_pixels)
+_TIFF_RGB = partial(rgb_pixel_rows, decode=decode_tiff_pixels)
+_THUMBNAIL_8X4 = partial(rgb_pixel_rows, decode=decode_image_pixels, resize_to=(8, 4))
 
 
 @register(
@@ -371,7 +395,13 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (frame index + tail-frame truncation); frame CONTENT (byte sums) is
     pytest-checked — a blob fold isn't portable SQL."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
-    frames = sample_frames(attach_binary_payload(docs, "doc_id", "text"))
+    frames = media_pass(
+        attach_binary_payload(docs, "doc_id", "text"),
+        "doc_id",
+        None,
+        frame_sample_rows,
+        FRAME_SCHEMA,
+    )
     return frames.select("doc_id", "frame_idx", "frame_n_bytes")
 
 
@@ -396,7 +426,13 @@ def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes the pipeline oracle-checkable.
     """
     docs = load(spark, sf_dir, "documents")
-    return extract_features(attach_binary_payload(docs, "doc_id", "text"))
+    return media_pass(
+        attach_binary_payload(docs, "doc_id", "text"),
+        "doc_id",
+        None,
+        feature_rows,
+        FEATURE_SCHEMA,
+    )
 
 
 @register(
@@ -418,7 +454,7 @@ def multimodal_image_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     need no codec library). Sizes are closed-form in doc_id, so the
     oracle recomputes the expected parse independently."""
     docs = load(spark, sf_dir, "documents")
-    return extract_image_headers(synthesize_image_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", image_header_payload, image_header_rows, HEADER_SCHEMA)
 
 
 @register(
@@ -445,7 +481,7 @@ def multimodal_audio_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     in doc_id, so the oracle recomputes the expected parse
     independently."""
     docs = load(spark, sf_dir, "documents")
-    return extract_audio_headers(synthesize_audio_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", wav_header_payload, audio_header_rows, AUDIO_HEADER_SCHEMA)
 
 
 @register(
@@ -486,7 +522,7 @@ def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeing the bytes: a hash match proves padding/BGR/row-order handling
     byte-for-byte. Integer-only outputs, so the hash is exact."""
     docs = load(spark, sf_dir, "documents")
-    return extract_pixel_stats(synthesize_bmp_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", bmp_payload, _BMP_RGB, PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -527,7 +563,7 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle recomputes the channel sums without seeing the bytes, so
     a hash match proves inflate + unfilter byte-for-byte."""
     docs = load(spark, sf_dir, "documents")
-    return extract_png_pixel_stats(synthesize_png_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", png_payload, _PNG_RGB, PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -567,7 +603,7 @@ def multimodal_png_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFra
     pass-boundary unfilter resets AND the scatter geometry, the two
     things a progressive layout adds over the sequential one."""
     docs = load(spark, sf_dir, "documents")
-    return extract_png_pixel_stats(synthesize_png_interlaced_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", png_interlaced_payload, _PNG_RGB, PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -606,7 +642,7 @@ def multimodal_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     in closed form, so a hash match proves the bpp-1 unfilter and the
     PLTE mapping exactly."""
     docs = load(spark, sf_dir, "documents")
-    return extract_png_pixel_stats(synthesize_png_palette_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", png_palette_payload, _PNG_RGB, PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -651,7 +687,7 @@ def multimodal_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     without seeing a byte — a hash match proves the LZW bit stream
     decodes exactly."""
     docs = load(spark, sf_dir, "documents")
-    return extract_gif_pixel_stats(synthesize_gif_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", gif_payload, _GIF_RGB, PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -693,7 +729,7 @@ def multimodal_gif_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFra
     this retires the 'interlaced GIF' line of the documented out-of-scope
     tail."""
     docs = load(spark, sf_dir, "documents")
-    return extract_gif_pixel_stats(synthesize_gif_interlaced_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", gif_interlaced_payload, _GIF_RGB, PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -735,7 +771,7 @@ def multimodal_png_gray16_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-of-scope tail. min/max outputs additionally pin per-pixel values,
     not just sums."""
     docs = load(spark, sf_dir, "documents")
-    return extract_png_gray16_stats(synthesize_png_gray16_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", png_gray16_payload, png_gray16_rows, GRAY16_STATS_SCHEMA)
 
 
 @register(
@@ -785,7 +821,9 @@ def multimodal_png_alpha_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match proves the four-channel unfilter AND the compositing
     arithmetic; retires the 'alpha PNG' line of the out-of-scope tail."""
     docs = load(spark, sf_dir, "documents")
-    return extract_png_alpha_composite_stats(synthesize_png_rgba_payloads(docs, "doc_id"))
+    return media_pass(
+        docs, "doc_id", png_rgba_payload, png_alpha_composite_rows, ALPHA_STATS_SCHEMA
+    )
 
 
 @register(
@@ -855,9 +893,7 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     'resize resampling' entry of the r6 verdict's gap list without an
     image library."""
     docs = load(spark, sf_dir, "documents")
-    return extract_resized_pixel_stats(
-        synthesize_bmp_payloads(docs, "doc_id"), 8, 4, method="bilinear"
-    )
+    return media_pass(docs, "doc_id", bmp_payload, _THUMBNAIL_8X4, PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -970,9 +1006,7 @@ def multimodal_jpeg_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     color matrices, AND the resampler bit-for-bit in one plan. Map-only
     mapInPandas, no shuffle — linear in corpus bytes at 100 TB."""
     docs = load(spark, sf_dir, "documents")
-    return extract_resized_pixel_stats(
-        synthesize_jpeg_color_payloads(docs, "doc_id"), 8, 4, method="bilinear"
-    )
+    return media_pass(docs, "doc_id", jpeg_color_payload, _THUMBNAIL_8X4, PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -1009,7 +1043,7 @@ def multimodal_audio_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle hash exact. sum_sq is the energy integral a loudness/VAD
     pipeline stage consumes."""
     docs = load(spark, sf_dir, "documents")
-    return extract_audio_sample_stats(synthesize_wav_pcm_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", wav_pcm_payload, pcm_sample_rows, AUDIO_SAMPLE_SCHEMA)
 
 
 @register(
@@ -1052,7 +1086,7 @@ def multimodal_stereo_sample_stats(spark: SparkSession, sf_dir: str) -> DataFram
     survive. Channel formulas are closed-form in doc_id; integer-only
     outputs keep the oracle hash exact."""
     docs = load(spark, sf_dir, "documents")
-    return extract_stereo_sample_stats(synthesize_wav_stereo_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", wav_stereo_payload, stereo_sample_rows, STEREO_STATS_SCHEMA)
 
 
 @register(
@@ -1098,7 +1132,7 @@ def multimodal_jpeg_luma_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds on busy/smooth content). No codec library involved — the
     DCT/Huffman arithmetic is the spec's own."""
     docs = load(spark, sf_dir, "documents")
-    return extract_jpeg_luma_stats(synthesize_jpeg_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", jpeg_payload, jpeg_luma_rows, LUMA_STATS_SCHEMA)
 
 
 @register(
@@ -1143,8 +1177,12 @@ def multimodal_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataF
     random images, gradients and checkerboards — which exercises EOBn,
     ZRL and refinement correction bits for real)."""
     docs = load(spark, sf_dir, "documents")
-    return extract_jpeg_progressive_stats(
-        synthesize_jpeg_progressive_payloads(docs, "doc_id")
+    return media_pass(
+        docs,
+        "doc_id",
+        jpeg_progressive_payload,
+        partial(jpeg_luma_rows, progressive=True),
+        LUMA_STATS_SCHEMA,
     )
 
 
@@ -1205,7 +1243,7 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-correct as-is.)"""
     import os
 
-    from ..operators.multimodal import decode_gif_pixels, make_gif_image
+    from ..operators.multimodal import make_gif_image
     from . import caches
 
     key = f"gif-files:{sf_dir}"
@@ -1275,7 +1313,6 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    from ..operators.multimodal import PIXEL_STATS_SCHEMA
 
     return binary.select("path", "content").mapInPandas(_decode, PIXEL_STATS_SCHEMA)
 
@@ -1353,7 +1390,7 @@ def multimodal_jpeg_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. Chroma subsampling (4:2:0) and progressive scans
     remain the documented long tail."""
     docs = load(spark, sf_dir, "documents")
-    return extract_jpeg_color_pixel_stats(synthesize_jpeg_color_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", jpeg_color_payload, jpeg_color_rows, PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -1425,7 +1462,7 @@ def multimodal_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     downsample/upsample pair, and the color matrices bit-for-bit.
     Remaining long tail: 4:2:2, progressive scans, restart markers."""
     docs = load(spark, sf_dir, "documents")
-    return extract_jpeg_color_pixel_stats(synthesize_jpeg420_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", jpeg420_payload, jpeg_color_rows, PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -1532,7 +1569,7 @@ def multimodal_adpcm_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     'lossy audio' entry of the r6 verdict's gap list with no codec
     library."""
     docs = load(spark, sf_dir, "documents")
-    return extract_adpcm_sample_stats(synthesize_adpcm_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", adpcm_payload, adpcm_sample_rows, AUDIO_SAMPLE_SCHEMA)
 
 
 @register(
@@ -1594,7 +1631,7 @@ def multimodal_g711_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     all 256 byte values), so a hash match proves both companding laws
     bit-for-bit."""
     docs = load(spark, sf_dir, "documents")
-    return extract_g711_sample_stats(synthesize_g711_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", g711_payload, g711_sample_rows, G711_STATS_SCHEMA)
 
 
 @register(
@@ -1635,7 +1672,7 @@ def multimodal_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     values are closed-form in doc_id, so one hash gate proves BOTH
     endiannesses and the PackBits codec."""
     docs = load(spark, sf_dir, "documents")
-    return extract_tiff_pixel_stats(synthesize_tiff_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", tiff_payload, _TIFF_RGB, PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -1681,7 +1718,7 @@ def multimodal_video_mjpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-frame zero-loss JPEG fixture construction keeps the whole
     container+codec walk bit-exact and oracle-checkable."""
     docs = load(spark, sf_dir, "documents")
-    return extract_video_frame_stats(synthesize_avi_payloads(docs, "doc_id"))
+    return media_pass(docs, "doc_id", avi_payload, video_frame_rows, VIDEO_FRAME_SCHEMA)
 
 
 @register(
@@ -1931,10 +1968,10 @@ def multimodal_audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFra
     are ordinary DataFrame ops. Map-only, frames contiguous per doc;
     amplitudes closed-form in doc_id so the oracle recomputes windowed
     energy without the bytes (operators/multimodal.py
-    extract_audio_energy_windows)."""
+    audio_energy_rows)."""
     docs = load(spark, sf_dir, "documents")
-    return extract_audio_energy_windows(
-        synthesize_wav_pcm_payloads(docs, "doc_id"), window=16
+    return media_pass(
+        docs, "doc_id", wav_pcm_payload, audio_energy_rows, AUDIO_ENERGY_WINDOW_SCHEMA
     )
 
 
@@ -2000,5 +2037,5 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import video_scene_cuts
 
     docs = load(spark, sf_dir, "documents")
-    fr = extract_video_frame_stats(synthesize_avi_payloads(docs, "doc_id"))
+    fr = media_pass(docs, "doc_id", avi_payload, video_frame_rows, VIDEO_FRAME_SCHEMA)
     return video_scene_cuts(fr, threshold_per_px=16)

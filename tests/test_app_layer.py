@@ -588,6 +588,37 @@ class TestMetadata:
         assert not db.session_exists("s1")
         assert db.get_chat_history("s1") == []
 
+    def test_answer_with_timestamp_rows_is_saved(self, spark, tmp_path):
+        """An answer holding whole rows of a file with a timestamp column
+        carries datetime cells; saving the chat record must not 500 the
+        ask route, and the record must come back from the history."""
+        pytest.importorskip("flask")
+        from ai_duckdb_spark.webapp import create_app
+
+        csv = tmp_path / "events.csv"
+        csv.write_text(
+            "event_id,amount,ts\n"
+            + "".join(f"{i},{10.5 * i},2024-03-0{i} 12:30:00\n" for i in range(1, 6))
+        )
+        app = create_app(upload_folder=str(tmp_path / "uploads"), db_path=str(tmp_path / "c.db"))
+        with app.test_client() as client:
+            with open(csv, "rb") as fh:
+                resp = client.post(
+                    "/api/upload",
+                    data={"file": (fh, "events.csv")},
+                    content_type="multipart/form-data",
+                )
+            assert resp.status_code == 200, resp.get_json()
+            assert "timestamp" in resp.get_json()["data_info"]["数据类型"]["ts"]
+            resp = client.post(
+                "/api/ask_question",
+                json={"question": "top 3 by amount", "file_id": resp.get_json()["file_id"]},
+            )
+            assert resp.status_code == 200, resp.get_json()
+            history = client.get("/api/chat_history").get_json()["history"]
+        assert [h["id"] for h in history] == [resp.get_json()["chat_id"]]
+        assert history[0]["result"]["row_count"] == 3
+
 
 # ---------------------------------------------------------------------------
 # NL→SQL stub + prompt contract

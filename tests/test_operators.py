@@ -6,6 +6,7 @@ variants."""
 from __future__ import annotations
 
 import datetime
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -516,8 +517,12 @@ class TestMultimodal:
 
     def test_feature_extraction_schema(self, spark, sf_dir):
         docs = load(spark, sf_dir, "documents").limit(20)
-        feats = multimodal.extract_features(
-            multimodal.attach_binary_payload(docs, "doc_id", "text")
+        feats = multimodal.media_pass(
+            multimodal.attach_binary_payload(docs, "doc_id", "text"),
+            "doc_id",
+            None,
+            multimodal.feature_rows,
+            multimodal.FEATURE_SCHEMA,
         )
         rows = feats.collect()
         assert len(rows) == 20
@@ -638,13 +643,17 @@ class TestMultimodal:
         assert multimodal.decode_bmp_pixels(ok[:-1]) is None
 
     def test_bmp_pixel_stats_distributed_ground_truth(self, spark):
-        """extract_pixel_stats over synthesized payloads matches a pure-
+        """BMP channel-sum stats over synthesized payloads match a pure-
         Python recomputation of the closed-form channel sums, including
         a doc id that takes the top-down branch (id % 5 == 0)."""
         ids = [0, 3, 7, 10, 33]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_pixel_stats(
-            multimodal.synthesize_bmp_payloads(df, "doc_id")
+        stats = multimodal.media_pass(
+            df,
+            "doc_id",
+            multimodal.bmp_payload,
+            partial(multimodal.rgb_pixel_rows, decode=multimodal.decode_bmp_pixels),
+            multimodal.PIXEL_STATS_SCHEMA,
         ).collect()
         got = {r.doc_id: (r.width, r.height, r.n_pixels, r.sum_r, r.sum_g, r.sum_b) for r in stats}
         for i in ids:
@@ -1176,8 +1185,12 @@ class TestMultimodal:
     def test_audio_sample_stats_distributed_ground_truth(self, spark):
         ids = [0, 7, 42, 123]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_audio_sample_stats(
-            multimodal.synthesize_wav_pcm_payloads(df, "doc_id")
+        stats = multimodal.media_pass(
+            df,
+            "doc_id",
+            multimodal.wav_pcm_payload,
+            multimodal.pcm_sample_rows,
+            multimodal.AUDIO_SAMPLE_SCHEMA,
         ).collect()
         got = {r.doc_id: (r.n_samples, r.sum_amp, r.min_amp, r.max_amp, r.sum_sq) for r in stats}
         for i in ids:
@@ -1227,8 +1240,12 @@ class TestMultimodal:
     def test_gif_pixel_stats_distributed_ground_truth(self, spark):
         ids = [0, 3, 7, 10, 33]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_gif_pixel_stats(
-            multimodal.synthesize_gif_payloads(df, "doc_id")
+        stats = multimodal.media_pass(
+            df,
+            "doc_id",
+            multimodal.gif_payload,
+            partial(multimodal.rgb_pixel_rows, decode=multimodal.decode_gif_pixels),
+            multimodal.PIXEL_STATS_SCHEMA,
         ).collect()
         got = {r.doc_id: (r.width, r.height, r.n_pixels, r.sum_r, r.sum_g, r.sum_b) for r in stats}
         for i in ids:
@@ -1316,8 +1333,12 @@ class TestMultimodal:
     def test_adpcm_sample_stats_distributed_ground_truth(self, spark):
         ids = [0, 7, 42, 123, 199]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_adpcm_sample_stats(
-            multimodal.synthesize_adpcm_payloads(df, "doc_id")
+        stats = multimodal.media_pass(
+            df,
+            "doc_id",
+            multimodal.adpcm_payload,
+            multimodal.adpcm_sample_rows,
+            multimodal.AUDIO_SAMPLE_SCHEMA,
         ).collect()
         got = {r.doc_id: (r.n_samples, r.sum_amp, r.min_amp, r.max_amp, r.sum_sq) for r in stats}
         for i in ids:
@@ -1472,8 +1493,12 @@ class TestMultimodal:
     def test_jpeg_color_stats_distributed_ground_truth(self, spark):
         ids = [0, 3, 7, 33]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_jpeg_color_pixel_stats(
-            multimodal.synthesize_jpeg_color_payloads(df, "doc_id")
+        stats = multimodal.media_pass(
+            df,
+            "doc_id",
+            multimodal.jpeg_color_payload,
+            multimodal.jpeg_color_rows,
+            multimodal.PIXEL_STATS_SCHEMA,
         ).collect()
         got = {r.doc_id: (r.n_pixels, r.sum_r, r.sum_g, r.sum_b) for r in stats}
         for i in ids:
@@ -1496,8 +1521,12 @@ class TestMultimodal:
     def test_jpeg_luma_stats_distributed_ground_truth(self, spark):
         ids = [0, 3, 7, 10, 33]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_jpeg_luma_stats(
-            multimodal.synthesize_jpeg_payloads(df, "doc_id")
+        stats = multimodal.media_pass(
+            df,
+            "doc_id",
+            multimodal.jpeg_payload,
+            multimodal.jpeg_luma_rows,
+            multimodal.LUMA_STATS_SCHEMA,
         ).collect()
         got = {r.doc_id: (r.width, r.height, r.n_pixels, r.sum_luma, r.min_luma, r.max_luma) for r in stats}
         for i in ids:
@@ -1513,10 +1542,12 @@ class TestMultimodal:
         df = spark.createDataFrame(
             [(1, "a" * 200), (2, "xy")], ["doc_id", "text"]
         )
-        frames = multimodal.sample_frames(
+        frames = multimodal.media_pass(
             multimodal.attach_binary_payload(df, "doc_id", "text"),
-            frame_bytes=64,
-            every=2,
+            "doc_id",
+            None,
+            partial(multimodal.frame_sample_rows, frame_bytes=64, every=2),
+            multimodal.FRAME_SCHEMA,
         ).collect()
         got = {(r.doc_id, r.frame_idx): (r.frame_n_bytes, r.frame_byte_sum) for r in frames}
         # doc 1: 200 bytes -> frames 0..3, sampled 0 and 2; byte 'a' = 97
@@ -1696,6 +1727,24 @@ class TestConnectedComponents:
         # the linear-round formulation must refuse, not silently mislabel
         with pytest.raises(RuntimeError, match="did not converge"):
             connected_components(chain, max_iterations=20)
+
+    def test_star_loop_above_cap_matches_unionfind(self, spark, monkeypatch):
+        """Above _RESIDUAL_UNIONFIND_CAP the hooked residual runs through
+        the distributed large-star/small-star loop instead of the driver
+        union-find. Both branches must label every node with its
+        component's minimum id, on a shallow cluster plus a 120-edge
+        chain."""
+        from ai_duckdb_spark.operators import cluster
+
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (1, 4)] + [(i, i + 1) for i in range(100, 220)],
+            ["id1", "id2"],
+        )
+        below = self._labels(cluster.connected_components_twophase(edges))
+        monkeypatch.setattr(cluster, "_RESIDUAL_UNIONFIND_CAP", 0)
+        above = self._labels(cluster.connected_components_twophase(edges))
+        assert above == below
+        assert above == {**dict.fromkeys(range(1, 5), 1), **dict.fromkeys(range(100, 221), 100)}
 
 
 class TestCorpusOps:
@@ -2719,13 +2768,15 @@ class TestLocalRelation:
 
 class TestAudioEnergyWindows:
     def test_windows_match_hand_computation(self, spark):
-        """extract_audio_energy_windows on a hand-built 10-sample WAV
+        """audio_energy_rows on a hand-built 10-sample WAV
         with window=4: three windows (4, 4, 2 samples) whose sums and
         energies are computed by hand; an undecodable payload
         contributes zero rows (never raises)."""
         from ai_duckdb_spark.operators.multimodal import (
-            extract_audio_energy_windows,
+            AUDIO_ENERGY_WINDOW_SCHEMA,
+            audio_energy_rows,
             make_wav_pcm,
+            media_pass,
         )
 
         samples = [3, -1, 4, -1, 5, -9, 2, -6, 5, 3]
@@ -2735,7 +2786,13 @@ class TestAudioEnergyWindows:
         )
         rows = sorted(
             (r["doc_id"], r["window_id"], r["n_in_window"], r["sum_amp"], r["sum_sq"])
-            for r in extract_audio_energy_windows(df, window=4).collect()
+            for r in media_pass(
+                df,
+                "doc_id",
+                None,
+                partial(audio_energy_rows, window=4),
+                AUDIO_ENERGY_WINDOW_SCHEMA,
+            ).collect()
         )
         assert rows == [
             (1, 0, 4, 3 - 1 + 4 - 1, 9 + 1 + 16 + 1),
@@ -2863,14 +2920,16 @@ class TestVideoSceneCuts:
         """End-to-end vs a pure-Python replay of the AVI fixture's
         closed form for a handful of doc ids spanning 1..5 frames."""
         from ai_duckdb_spark.operators.multimodal import (
-            extract_video_frame_stats,
-            synthesize_avi_payloads,
+            VIDEO_FRAME_SCHEMA,
+            avi_payload,
+            media_pass,
+            video_frame_rows,
             video_scene_cuts,
         )
 
         ids = [3, 7, 11, 24, 30]  # n_frames = id%5+1 -> 4,3,2,5,1
         docs = spark.createDataFrame([(i,) for i in ids], "doc_id LONG")
-        fr = extract_video_frame_stats(synthesize_avi_payloads(docs, "doc_id"))
+        fr = media_pass(docs, "doc_id", avi_payload, video_frame_rows, VIDEO_FRAME_SCHEMA)
         got = {
             r.doc_id: (r.n_frames, r.n_cuts, r.max_jump)
             for r in video_scene_cuts(fr, threshold_per_px=16).collect()

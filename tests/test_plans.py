@@ -686,6 +686,31 @@ def test_video_scene_cuts_one_shuffle_after_decode(spark, sf_dir):
     assert "MapInPandas" in plan
 
 
+# multimodal entries that read an existing binary column instead of
+# synthesizing their payloads from doc ids
+_BINARY_INPUT_ENTRIES = {
+    "multimodal_image_features",
+    "multimodal_frame_sample",
+    "multimodal_binary_ingest",
+}
+
+
+def test_synthesized_media_entries_are_one_python_pass(spark, sf_dir):
+    """Every synthesized-payload multimodal entry encodes AND measures
+    its media inside ONE mapInPandas (operators/multimodal.py
+    media_pass): each row crosses the JVM<->Python boundary once and the
+    payload bytes never do. A second MapInPandas means an entry went
+    back to a synthesize-then-extract chain."""
+    names = sorted(
+        n
+        for n in catalog.REGISTRY
+        if n.startswith("multimodal_") and n not in _BINARY_INPUT_ENTRIES
+    )
+    assert len(names) == 24, names
+    counts = {n: _plan(spark, sf_dir, n).count("MapInPandas") for n in names}
+    assert counts == dict.fromkeys(names, 1)
+
+
 def test_footer_inventory_is_metadata_only_map(spark, sf_dir):
     """source_footer_inventory: footer reads are a map over the file
     list (MapInPandas), the rollup is one aggregation — no join, and no
