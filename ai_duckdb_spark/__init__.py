@@ -12,6 +12,7 @@ column plumbing).
 Layout:
     session.py    SparkSession factory tuned for local + cluster use
     tables.py     test-table loading / temp-view registration helpers
+    caches.py     per-session memo for build-once state (indexes, fixtures)
     sources/      ingestion: suffix gate, csv/parquet/excel/json 3-tier
     profile.py    data_info profiling (reference doc.py:104-110 semantics)
     registry.py   per-file table registry ("data_table" scoping)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import caches
 from ..operators import bpe
 from ..tables import load
 from .catalog import register
@@ -140,9 +141,7 @@ def corpus_curriculum_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MERGES_CACHE: dict[tuple[str, str], list[tuple[str, str, str, int]]] = {}
-
-
+@caches.index("bpe_merges")
 def shared_merge_rules(
     spark: SparkSession, sf_dir: str, n_merges: int = 8
 ) -> list[tuple[str, str, str, int]]:
@@ -150,12 +149,7 @@ def shared_merge_rules(
     train-once/apply-many contract a tokenizer actually has (same
     shared-model pattern as similarity_q.shared_kmeans_model and the
     _pairs_095 relation)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MERGES_CACHE:
-        _MERGES_CACHE[key] = bpe.learn_merges(
-            load(spark, sf_dir, "documents"), n_merges=n_merges
-        )
-    return _MERGES_CACHE[key]
+    return bpe.learn_merges(load(spark, sf_dir, "documents"), n_merges=n_merges)
 
 
 @register("bpe_encode_stats", oracle=None)

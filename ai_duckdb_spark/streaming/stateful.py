@@ -14,7 +14,6 @@ cross-key coordination, which is what lets state scale horizontally.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -99,16 +98,11 @@ def running_user_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    sink = f"stateful_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        out.writeStream.outputMode("update").format("memory").queryName(sink),
-    )
+    emissions = _drain(spark, out, "update")
     # update-mode memory sink appends each emission; keep the final state
     # per user (max n_events is monotonically the latest)
     from pyspark.sql import functions as F
 
-    emissions = spark.table(sink)
     return emissions.groupBy("user_id").agg(
         F.max_by("total_value", "n_events").alias("total_value"),
         F.max("n_events").alias("n_events"),
@@ -165,14 +159,9 @@ def running_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
     )
-    sink = f"tws_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        out.writeStream.outputMode("update").format("memory").queryName(sink),
-    )
+    emissions = _drain(spark, out, "update")
     from pyspark.sql import functions as F
 
-    emissions = spark.table(sink)
     return emissions.groupBy("user_id").agg(
         F.max_by("total_value", "n_events").alias("total_value"),
         F.max("n_events").alias("n_events"),

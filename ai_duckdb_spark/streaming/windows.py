@@ -13,6 +13,9 @@ defaults (event-time windows, watermark-bounded state).
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
 import uuid
 from contextlib import contextmanager
 from typing import Iterator
@@ -20,6 +23,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import caches
 from ..tables import convert_event_ts, table_path
 
 # State-store partition count for the bounded fixture replays. The number
@@ -31,41 +35,17 @@ from ..tables import convert_event_ts, table_path
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
-_SCRATCH_DIRS: list[str] = []
-
-
-def _cleanup_scratch_dirs() -> None:
-    import shutil
-
-    while _SCRATCH_DIRS:
-        shutil.rmtree(_SCRATCH_DIRS.pop(), ignore_errors=True)
-
-
-def scratch_dir(prefix: str) -> str:
-    """A scratch directory for checkpoint/sink state, on tmpfs when the
-    host has one. The HDFS-backed state store commits one delta file
-    PER STORE PER BATCH (write + rename + fsync), and the file-source /
-    commit logs add more small synced writes — on hosts whose temp
-    volume has slow fsync this dominates a bounded replay (measured
-    3.5× on the streaming suite). State-store durability on a LOCAL
-    disk buys nothing anyway: recovery after node loss needs a shared
-    filesystem, which is what production checkpoint locations are — so
-    locally, RAM-backed tmpfs is the honest equivalent.
-
-    tmpfs is RAM-backed and typically capped at 50% of memory, so every
-    directory handed out is registered for removal at interpreter exit
-    — otherwise repeated bench/pytest runs accumulate checkpoint state
-    until tmpfs fills and mid-run writes start failing."""
-    import atexit
-    import os
-    import tempfile
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    d = tempfile.mkdtemp(prefix=prefix, dir=base)
-    if not _SCRATCH_DIRS:
-        atexit.register(_cleanup_scratch_dirs)
-    _SCRATCH_DIRS.append(d)
-    return d
+# Checkpoint/sink scratch goes to tmpfs when the host has one. The
+# HDFS-backed state store commits one delta file PER STORE PER BATCH
+# (write + rename + fsync), and the file-source / commit logs add more
+# small synced writes — on hosts whose temp volume has slow fsync this
+# dominates a bounded replay (measured 3.5× on the streaming suite).
+# State-store durability on a LOCAL disk buys nothing anyway: recovery
+# after node loss needs a shared filesystem, which is what production
+# checkpoint locations are — so locally, RAM-backed tmpfs is the honest
+# equivalent. tmpfs is typically capped at 50% of memory, which is why
+# every such dir comes from caches.make_tempdir (removed at exit).
+TMPFS = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 
 @contextmanager
@@ -79,7 +59,7 @@ def stream_run_confs(spark: SparkSession) -> Iterator[None]:
       trailing no-data batch exists only to advance the watermark and
       evict state, which is pure per-query overhead when the query is
       stopped immediately after draining;
-    * checkpoint root → tmpfs (see scratch_dir): queries without an
+    * checkpoint root → tmpfs (see TMPFS): queries without an
       explicit checkpointLocation land under it instead of a slow-fsync
       temp volume.
 
@@ -92,7 +72,8 @@ def stream_run_confs(spark: SparkSession) -> Iterator[None]:
     spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     spark.conf.set(
-        "spark.sql.streaming.checkpointLocation", scratch_dir("stream_ckpt_")
+        "spark.sql.streaming.checkpointLocation",
+        caches.make_tempdir("stream_ckpt_", dir=TMPFS),
     )
     try:
         yield
@@ -105,28 +86,26 @@ def stream_run_confs(spark: SparkSession) -> Iterator[None]:
             spark.conf.set("spark.sql.streaming.checkpointLocation", ckpt)
 
 
-def _drain(spark: SparkSession, writer) -> None:
-    """Start a bounded streaming query under the replay confs and block
-    until every available input is processed, then stop it."""
+def _drain(spark: SparkSession, df: DataFrame, mode: str) -> DataFrame:
+    """Run ``df`` as a bounded streaming query into a uniquely named
+    memory sink under the replay confs, block until every available
+    input is processed, stop it, and return the sink as a batch table."""
+    sink = f"sink_{uuid.uuid4().hex[:8]}"
     with stream_run_confs(spark):
-        query = writer.start()
+        query = df.writeStream.outputMode(mode).format("memory").queryName(sink).start()
         try:
             query.processAllAvailable()
         finally:
             query.stop()
+    return spark.table(sink)
 
 
 # A file-source stream needs an explicit schema, which costs a footer-read
-# job per query; the fixture schemas are immutable per session, so peek
-# once (keyed by application id — a new session must re-peek).
-_SCHEMA_CACHE: dict = {}
-
-
+# job per query; the fixture schemas are immutable, so peek once per
+# session.
+@caches.per_session
 def _fixture_schema(spark: SparkSession, path: str):
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[key]
+    return spark.read.parquet(path).schema
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,12 +171,7 @@ def tumbling_counts_stream(
             F.sum(F.round(F.col("value"), 2).cast("decimal(28,2)")).cast("double").alias("total_value"),
         )
     )
-    sink = f"tumbling_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink).select(
+    return _drain(spark, agg, "complete").select(
         F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n_events",
@@ -218,12 +192,7 @@ def session_window_stream(
         .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    sink = f"session_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink).select(
+    return _drain(spark, agg, "complete").select(
         "user_id",
         F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         "n_events",
@@ -242,12 +211,7 @@ def dedup_within_watermark_stream(
         .groupBy("event_type")
         .agg(F.count("*").alias("n_unique"))
     )
-    sink = f"dedup_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        deduped.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink)
+    return _drain(spark, deduped, "complete")
 
 
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -275,12 +239,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
     )
-    sink = f"enrich_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink)
+    return _drain(spark, agg, "complete")
 
 
 def sliding_counts_stream(
@@ -304,12 +263,7 @@ def sliding_counts_stream(
             .alias("total_value"),
         )
     )
-    sink = f"sliding_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink).select(
+    return _drain(spark, agg, "complete").select(
         F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "n_events",
         "total_value",
@@ -364,16 +318,46 @@ def stream_stream_purchase_click_join(
             "ms_since_click"
         ),
     )
-    sink = f"ssjoin_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        joined.writeStream.outputMode("append").format("memory").queryName(sink),
-    )
-    return spark.table(sink)
+    return _drain(spark, joined, "append")
 
 
-_SSLOJ_DIRS: dict = {}
 _SSLOJ_SENTINEL_BASE = 9_000_000_000_000
+
+
+def _stage_replay(prefix: str, gens: list[DataFrame]) -> str:
+    """Write each frame as one parquet file of a replay dir, mtimes
+    pinned so the file source replays them as ordered micro-batches."""
+    replay = caches.make_tempdir(f"{prefix}src_", dir=TMPFS)
+    for i, part in enumerate(gens):
+        d = caches.make_tempdir(f"{prefix}gen{i}_", dir=TMPFS)
+        part.coalesce(1).write.mode("overwrite").parquet(d)
+        dst = os.path.join(replay, f"gen{i}.parquet")
+        shutil.copyfile(glob.glob(os.path.join(d, "part-*.parquet"))[0], dst)
+        os.utime(dst, (1_700_000_000 + i * 60,) * 2)
+    return replay
+
+
+@caches.per_session
+def _ssloj_replay(spark: SparkSession, sf_dir: str) -> str:
+    """The three-generation replay dir of
+    stream_stream_purchase_click_left_join (see its docstring)."""
+    from ..tables import load
+
+    ev = load(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "ts"
+    )
+    ticks = [
+        ev.agg(F.max("ts").alias("m")).select(
+            F.lit(_SSLOJ_SENTINEL_BASE + 2 * i + j).cast("long").alias("event_id"),
+            F.lit(-1).cast("long").alias("user_id"),
+            F.lit(t).alias("event_type"),
+            (F.col("m") + F.expr(f"INTERVAL {12 * 60 + i} MINUTES")).alias("ts"),
+        )
+        for i in range(2)
+        for j, t in enumerate(("purchase", "click"))
+    ]
+    gens = [ev, ticks[0].union(ticks[1]), ticks[2].union(ticks[3])]
+    return _stage_replay("ssloj_", gens)
 
 
 def stream_stream_purchase_click_left_join(
@@ -415,37 +399,7 @@ def stream_stream_purchase_click_left_join(
     same eviction this entry proves end to end; the NULL-emission rule
     is what makes bounded-state outer joins safe to run continuously.
     """
-    import glob
-    import os
-    import shutil
-
-    from ..tables import load
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SSLOJ_DIRS:
-        replay = scratch_dir("ssloj_src_")
-        ev = load(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "ts"
-        )
-        ticks = [
-            ev.agg(F.max("ts").alias("m")).select(
-                F.lit(_SSLOJ_SENTINEL_BASE + 2 * i + j).cast("long").alias("event_id"),
-                F.lit(-1).cast("long").alias("user_id"),
-                F.lit(t).alias("event_type"),
-                (F.col("m") + F.expr(f"INTERVAL {12 * 60 + i} MINUTES")).alias("ts"),
-            )
-            for i in range(2)
-            for j, t in enumerate(("purchase", "click"))
-        ]
-        gens = [ev, ticks[0].union(ticks[1]), ticks[2].union(ticks[3])]
-        for i, part in enumerate(gens):
-            d = scratch_dir(f"ssloj_gen{i}_")
-            part.coalesce(1).write.mode("overwrite").parquet(d)
-            dst = os.path.join(replay, f"gen{i}.parquet")
-            shutil.copyfile(glob.glob(os.path.join(d, "part-*.parquet"))[0], dst)
-            os.utime(dst, (1_700_000_000 + i * 60,) * 2)
-        _SSLOJ_DIRS[key] = replay
-    replay = _SSLOJ_DIRS[key]
+    replay = _ssloj_replay(spark, sf_dir)
 
     schema = spark.read.parquet(replay).schema
     src = (
@@ -486,14 +440,10 @@ def stream_stream_purchase_click_left_join(
             "ms_since_click"
         ),
     )
-    sink = f"ssloj_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        joined.writeStream.outputMode("append").format("memory").queryName(sink),
-    )
+    out = _drain(spark, joined, "append")
     # sentinel removal happens HERE, on the batch read — see the
     # pushdown-trap paragraph in the docstring
-    return spark.table(sink).filter(F.col("purchase_id") < _SSLOJ_SENTINEL_BASE)
+    return out.filter(F.col("purchase_id") < _SSLOJ_SENTINEL_BASE)
 
 
 def langid_confusion_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -510,12 +460,7 @@ def langid_confusion_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = docs.groupBy("lang", predicted_lang().alias("predicted_lang")).agg(
         F.count("*").alias("n")
     )
-    sink = f"langid_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink).orderBy("lang", "predicted_lang")
+    return _drain(spark, agg, "complete").orderBy("lang", "predicted_lang")
 
 
 def incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -547,12 +492,7 @@ def incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("new_doc_id")
         .agg(F.min("e_id").alias("dup_of_existing"))
     )
-    sink = f"incdedup_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        hits.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink).orderBy("new_doc_id")
+    return _drain(spark, hits, "complete").orderBy("new_doc_id")
 
 
 def foreach_batch_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -565,8 +505,8 @@ def foreach_batch_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     this proves the durable-output contract: what lands on disk after the
     stream drains is byte-for-byte the source corpus.
     """
-    out = scratch_dir("fb_sink_")
-    ckpt = scratch_dir("fb_ckpt_")
+    out = caches.make_tempdir("fb_sink_", dir=TMPFS)
+    ckpt = caches.make_tempdir("fb_ckpt_", dir=TMPFS)
 
     stream = _document_stream(spark, sf_dir).select("doc_id", "lang", "text")
 
@@ -614,8 +554,8 @@ def cms_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import sketches
     from ..session import widen_narrow_scan
 
-    out = scratch_dir("cms_sink_")
-    ckpt = scratch_dir("cms_ckpt_")
+    out = caches.make_tempdir("cms_sink_", dir=TMPFS)
+    ckpt = caches.make_tempdir("cms_ckpt_", dir=TMPFS)
 
     stream = _document_stream(spark, sf_dir).select("text")
 
@@ -686,13 +626,8 @@ def topk_tokens_stream(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFra
         .groupBy("tok")
         .agg(F.count("*").alias("n"))
     )
-    sink = f"topk_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        counts.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
     return (
-        spark.table(sink)
+        _drain(spark, counts, "complete")
         .orderBy(F.desc("n"), "tok")
         .limit(k)
         .select("tok", F.col("n").cast("long").alias("n"))
@@ -700,11 +635,31 @@ def topk_tokens_stream(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFra
 
 
 # Replay dirs for the watermark late-drop proof, staged once per
-# (application, sf_dir): gen0 = the on-time flow, gen1/gen2 = two
+# session and sf_dir: gen0 = the on-time flow, gen1/gen2 = two
 # single-row "tick" batches (near-max rows that advance NOTHING but let
 # the watermark PROPAGATE), gen3 = the late arrivals; mtimes pinned so
 # the file source replays them as four ordered micro-batches.
-_LATEDROP_DIRS: dict = {}
+@caches.per_session
+def _latedrop_replay(spark: SparkSession, sf_dir: str) -> str:
+    from pyspark.sql import Window as SqlWindow
+
+    from ..tables import load
+
+    ev = load(spark, sf_dir, "events").select("event_id", "ts")
+    on_time = ev.filter(F.col("event_id") % 5 != 0)
+    # rank 1 (the max) stays in gen0 so batch 0 sets the final
+    # watermark; ranks 2 and 3 become the tick batches
+    rk = F.row_number().over(
+        SqlWindow.orderBy(F.desc("ts"), F.desc("event_id"))
+    )
+    ranked = on_time.withColumn("__rk", rk)
+    gens = [
+        ranked.filter(~F.col("__rk").isin(2, 3)).drop("__rk"),
+        ranked.filter(F.col("__rk") == 2).drop("__rk"),
+        ranked.filter(F.col("__rk") == 3).drop("__rk"),
+        ev.filter(F.col("event_id") % 5 == 0),
+    ]
+    return _stage_replay("latedrop_", gens)
 
 
 def watermark_latedrop_stream(
@@ -752,39 +707,7 @@ def watermark_latedrop_stream(
     never resurrected); the filter is a map-side comparison against a
     literal — this entry is the eviction proof the unbounded
     complete-mode entries cannot give."""
-    import glob
-    import os
-    import shutil
-
-    from pyspark.sql import Window as SqlWindow
-
-    from ..tables import load
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LATEDROP_DIRS:
-        replay = scratch_dir("latedrop_src_")
-        ev = load(spark, sf_dir, "events").select("event_id", "ts")
-        on_time = ev.filter(F.col("event_id") % 5 != 0)
-        # rank 1 (the max) stays in gen0 so batch 0 sets the final
-        # watermark; ranks 2 and 3 become the tick batches
-        rk = F.row_number().over(
-            SqlWindow.orderBy(F.desc("ts"), F.desc("event_id"))
-        )
-        ranked = on_time.withColumn("__rk", rk)
-        gens = [
-            ranked.filter(~F.col("__rk").isin(2, 3)).drop("__rk"),
-            ranked.filter(F.col("__rk") == 2).drop("__rk"),
-            ranked.filter(F.col("__rk") == 3).drop("__rk"),
-            ev.filter(F.col("event_id") % 5 == 0),
-        ]
-        for i, part in enumerate(gens):
-            d = scratch_dir(f"latedrop_gen{i}_")
-            part.coalesce(1).write.mode("overwrite").parquet(d)
-            dst = os.path.join(replay, f"gen{i}.parquet")
-            shutil.copyfile(glob.glob(os.path.join(d, "part-*.parquet"))[0], dst)
-            os.utime(dst, (1_700_000_000 + i * 60,) * 2)
-        _LATEDROP_DIRS[key] = replay
-    replay = _LATEDROP_DIRS[key]
+    replay = _latedrop_replay(spark, sf_dir)
 
     schema = spark.read.parquet(replay).schema
     src = (
@@ -798,13 +721,8 @@ def watermark_latedrop_stream(
         .groupBy(F.window("ts", window_duration).alias("win"))
         .agg(F.count("*").alias("n_events"))
     )
-    sink = f"latedrop_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("update").format("memory").queryName(sink),
-    )
     return (
-        spark.table(sink)
+        _drain(spark, agg, "update")
         .groupBy(
             F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start")
         )

@@ -222,14 +222,17 @@ def main() -> None:
             con.execute(f"SELECT count(*) FROM {name}").fetchall()
 
     # one-shot index builds, timed individually (r6 judge item 5): the
-    # build-once/query-many entries (MinHash core/labels, Jaccard-0.95
-    # clustering, IVF quantizer + persisted index, NN-Descent graph, PQ
-    # codebooks, BPE merges) memoize their index per session, so their
-    # warm numbers are cache hits BY DESIGN; the one-shot build cost is
-    # attributed HERE instead of smearing into cold_total. A small
-    # first-touch warmup (corpus counts) runs first so the first builder
-    # doesn't also pay session JIT + page-cache cold.
-    from ai_duckdb_spark.queries.caches import clear_index_caches, index_builders
+    # build-once/query-many entries memoize their index per session
+    # through ai_duckdb_spark/caches.py (every @caches.index: MinHash
+    # core/labels, Jaccard-0.95 pairs/clustering, IVF quantizer +
+    # persisted index, NN-Descent graph, PQ codebooks, BPE merges), so
+    # their warm numbers are cache hits BY DESIGN; the one-shot build
+    # cost is attributed HERE instead of smearing into cold_total. An
+    # index built inside an earlier one (the 0.95 pairs, by the labels)
+    # reads 0 jobs. A small first-touch warmup (corpus counts) runs
+    # first so the first builder doesn't also pay session JIT +
+    # page-cache cold.
+    from ai_duckdb_spark.caches import clear_index_caches, index_builders
     from ai_duckdb_spark.tables import load as load_table
 
     for t in ("documents", "embeddings"):
