@@ -23,7 +23,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .executor import UnsafeSqlError, execute_sql
+from .executor import UnsafeSqlError, clean_sql_response, execute_sql
 from .nl2sql import SqlGenerator, StubSqlGenerator
 from .profile import profile_dataframe
 from .registry import TableRegistry
@@ -93,8 +93,6 @@ class AnalyticsEngine:
             return {"error": str(e)}
         except Exception as e:  # reference doc.py:245-248
             return {"error": f"查询执行失败: {e}"}
-
-        from .executor import clean_sql_response
 
         return {
             "question": question,

@@ -496,6 +496,45 @@ class TestExecutor:
         assert len(result["data"]) == 7
         assert result["truncated"] is True
 
+    def test_execute_exactly_at_cap_is_not_truncated(self, spark):
+        result = execute_sql(spark, "SELECT id FROM range(7) AS t(id)", row_cap=7)
+        assert result["truncated"] is False
+        assert result["row_count"] == 7
+        assert [r["id"] for r in result["data"]] == list(range(7))
+
+    def test_execute_one_over_cap_counts_exactly(self, spark):
+        result = execute_sql(spark, "SELECT id FROM range(8) AS t(id)", row_cap=7)
+        assert result["truncated"] is True
+        assert result["row_count"] == 8
+        assert len(result["data"]) == 7
+
+    def test_execute_empty_result(self, spark):
+        result = execute_sql(spark, "SELECT id FROM range(10) AS t(id) WHERE id < 0")
+        assert result["row_count"] == 0
+        assert result["data"] == []
+        assert result["truncated"] is False
+        assert result["columns"] == ["id"]
+
+    def test_execute_top_n_counts_the_limit(self, spark):
+        result = execute_sql(
+            spark, "SELECT id FROM range(100) AS t(id) ORDER BY id DESC LIMIT 5", row_cap=7
+        )
+        assert result["row_count"] == 5
+        assert [r["id"] for r in result["data"]] == [99, 98, 97, 96, 95]
+
+    def test_untruncated_answer_never_counts(self, spark, monkeypatch):
+        # Patch the concrete DataFrame class spark.sql returns (pyspark's
+        # classic DataFrame overrides the base class's count).
+        def no_count(self):
+            raise AssertionError("count() ran for an untruncated answer")
+
+        monkeypatch.setattr(type(spark.sql("SELECT 1")), "count", no_count)
+        result = execute_sql(
+            spark, "SELECT id % 3 AS k, count(*) AS n FROM range(100) AS t(id) GROUP BY k"
+        )
+        assert result["row_count"] == 3 and result["truncated"] is False
+        assert sorted((r["k"], r["n"]) for r in result["data"]) == [(0, 34), (1, 33), (2, 33)]
+
     def test_execute_fenced(self, spark):
         result = execute_sql(spark, "```sql\nSELECT 1 AS one\n```")
         assert result["data"] == [{"one": 1}] and result["row_count"] == 1

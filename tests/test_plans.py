@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ai_duckdb_spark.executor import execute_sql
 from ai_duckdb_spark.plans import executed_plan
 from ai_duckdb_spark.queries import catalog
 
@@ -814,3 +815,33 @@ def test_window_distribution_suite_two_pass_rank(spark, sf_dir):
     assert "WindowGroupLimit" in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     assert "GreaterThan(o_totalprice,490000" in plan, plan
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs submitted while ``action()`` runs (a DAGScheduler delta)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()  # noqa: SLF001
+    before = dag.numTotalJobs()
+    action()
+    return dag.numTotalJobs() - before
+
+
+def test_untruncated_answer_is_one_collect(spark):
+    """execute_sql on an answer under the cap submits exactly the jobs of
+    one ``limit(cap + 1).collect()``: no ``count()`` pass runs the
+    aggregate a second time."""
+    q = "SELECT id % 7 AS k, sum(id) AS s FROM range(100000) AS t(id) GROUP BY k"
+    cap = 100
+    one_collect = _jobs(spark, lambda: spark.sql(q).limit(cap + 1).collect())
+    answer = _jobs(spark, lambda: execute_sql(spark, q, row_cap=cap))
+    assert answer == one_collect, (answer, one_collect)
+
+
+def test_truncated_answer_adds_only_the_count(spark):
+    """Over the cap, execute_sql pays the one collect plus one ``count()``
+    for the exact row_count, and nothing else."""
+    q = "SELECT id FROM range(11) AS t(id)"
+    cap = 10
+    one_collect = _jobs(spark, lambda: spark.sql(q).limit(cap + 1).collect())
+    count = _jobs(spark, lambda: spark.sql(q).count())
+    answer = _jobs(spark, lambda: execute_sql(spark, q, row_cap=cap))
+    assert answer == one_collect + count, (answer, one_collect, count)
